@@ -24,6 +24,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import skip_unchanged_zip_rereads
 from .png import PNG_SIG, decode_png, luma
 
 MEDIA_SCHEMA = (
@@ -89,6 +90,7 @@ def extract_features(media: DataFrame, payload_col: str = "payload",
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for b in batches:
             feats = [
                 _features(bytes(p), k).tolist()
@@ -164,6 +166,7 @@ def resize_images(media: DataFrame, width: int, height: int,
     is the row-major resized grid as array<int>.
     """
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         ty = np.arange(height)
         tx = np.arange(width)
         for b in batches:

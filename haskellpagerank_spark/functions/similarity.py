@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import skip_unchanged_zip_rereads
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -60,6 +62,7 @@ def with_cosine_arrow(df: DataFrame, a: str, b: str,
         for f in df.schema.fields if f.name in keep) + f", {out} double"
 
     def kernel(batches):
+        skip_unchanged_zip_rereads()
         for p in batches:
             if not len(p):
                 continue
@@ -143,6 +146,7 @@ def lsh_signatures(emb: DataFrame, dim: int, bits: int = 16,
     weights = (1 << np.arange(bits, dtype=np.int64))   # (B,)
 
     def kernel(batches):
+        skip_unchanged_zip_rereads()
         for b in batches:
             if not len(b):
                 continue
@@ -219,6 +223,7 @@ def ivf_assignments(emb: DataFrame, centroids: np.ndarray,
     c = np.asarray(centroids, dtype=np.float64)
 
     def kernel(batches):
+        skip_unchanged_zip_rereads()
         for b in batches:
             if not len(b):
                 continue

@@ -23,6 +23,7 @@ import numpy as np
 import pandas as pd
 
 from ..plans.checkpoint import IterationMetrics
+from ..session import skip_unchanged_zip_rereads
 from .components import IterativeResult
 from .graph import Graph, invert
 from .pagerank_csr import BLOCK_SCHEMA
@@ -36,6 +37,7 @@ def _build_blocks_und(g: Graph, num_blocks: int):
     idempotent under duplicates anyway, dedup just shrinks the buffers)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         srcs, dsts = [], []
         for p in batches:
             srcs.append(p["src"].to_numpy(np.int64))
@@ -88,6 +90,7 @@ def connected_components_spmv(g: Graph, max_iters: int = 200,
         bc = sc.broadcast(labels)
 
         def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            skip_unchanged_zip_rereads()
             x = bc.value
             for pdf in batches:
                 ids, mins = [], []

@@ -73,6 +73,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import CheckpointManager, IterationMetrics
+from ..session import skip_unchanged_zip_rereads
 from .graph import Graph, amend_sinks
 from .pagerank import PageRankConfig, PageRankResult, weighted_edges
 
@@ -107,6 +108,7 @@ def _make_block_kernel(damping: float, dconst: float):
     """
 
     def kernel(vpdf: pd.DataFrame, epdf: pd.DataFrame) -> pd.DataFrame:
+        skip_unchanged_zip_rereads()
         if not len(vpdf):
             return pd.DataFrame(
                 columns=["block", "id", "rank", "has_out", "delta"])

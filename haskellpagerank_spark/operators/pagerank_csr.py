@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import CheckpointManager, IterationMetrics
+from ..session import skip_unchanged_zip_rereads
 from .graph import Graph, amend_sinks
 from .pagerank import PageRankConfig, PageRankResult
 
@@ -77,6 +78,7 @@ def build_csr_blocks(work: Graph, num_blocks: int,
     """
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         srcs, dsts = [], []
         for p in batches:
             srcs.append(p["src"].to_numpy(np.int64))
@@ -132,6 +134,7 @@ def _spmv_job(blocks: DataFrame, x_bc) -> tuple[np.ndarray, np.ndarray]:
     """One distributed gather-scatter sweep -> (dst ids, partial sums)."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         x = x_bc.value
         for pdf in batches:
             ids, msgs = [], []

@@ -53,6 +53,7 @@ from pyspark.sql.types import (
 )
 
 from ..operators.graph import Graph, from_edge_df
+from ..session import skip_unchanged_zip_rereads
 
 PAGES_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -228,6 +229,7 @@ def generate_pages(spark: SparkSession, num_pages: int, seed: int = 42,
     parts = num_partitions or spark.sparkContext.defaultParallelism
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for b in batches:
             yield _gen_batch(b["id"].to_numpy(), num_pages, seed, num_sites,
                              avg_links, hub_count, hub_prob_mod)
@@ -244,6 +246,7 @@ def extract_text(pages: DataFrame) -> DataFrame:
     Arrow batches; byte-identical to the canonical rule per url."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for b in batches:
             html = b["html"].str.decode("utf-8")  # vectorized, no per-row Python
             text = (
@@ -267,6 +270,7 @@ def extract_links(pages: DataFrame) -> DataFrame:
     pandas ``str.extractall`` inside Arrow batches."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for b in batches:
             html = b["html"].str.decode("utf-8")  # vectorized, no per-row Python
             hits = html.str.extractall(_HREF_RE)
@@ -321,6 +325,7 @@ def encode_vertices(raw_edges: DataFrame) -> DataFrame:
     b_offsets = spark.sparkContext.broadcast(offsets)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         pos = -1
         for b in batches:
             if len(b) == 0:
@@ -402,6 +407,7 @@ def extract_anchors(pages: DataFrame) -> DataFrame:
     pipeline aggregates per target page."""
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         for b in batches:
             html = b["html"].str.decode("utf-8")  # vectorized, no per-row Python
             hits = html.str.extractall(_ANCHOR_RE)

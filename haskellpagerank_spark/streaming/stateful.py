@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import skip_unchanged_zip_rereads
+
 DEGREE_OUTPUT_SCHEMA = "id long, out_deg long, in_deg long, is_hub boolean"
 DEGREE_STATE_SCHEMA = "out_deg long, in_deg long"
 
@@ -60,6 +62,7 @@ def running_degrees(edges: DataFrame,
 
     def update(key: tuple, pdfs: Iterator[pd.DataFrame],
                state: GroupState) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_rereads()
         out_deg, in_deg = state.get if state.exists else (0, 0)
         for pdf in pdfs:
             out_deg += int(pdf["d_out"].sum())

@@ -1,17 +1,19 @@
-"""Parity on the reference's own bundled input files (executables/input/).
+"""Parity on the reference's bundled input files (executables/input/).
 
-The inline fixtures (fixtures.py) replicate the small graphs; these tests
-read the *actual files* — tab- and space-separated, up to 200k edges
-(rmatTest.txt, the reference benchmark's largest bundled workload,
-MainBench.hs:151-155) — through the engine's parser and match the NumPy
+Edge-list files go through the engine's parser and must match the NumPy
 oracle per-vertex, reference semantics (d=0.15, amendSinks, 5 sweeps =
-defaultNumberOfIterations, MainBench.hs:26-27).
+defaultNumberOfIterations, MainBench.hs:26-27). The doubleSquare graphs are
+written from the inline fixtures (fixtures.py) in both space- and
+tab-separated form; the other cases read the actual files — up to 200k
+edges (rmatTest.txt, the reference benchmark's largest bundled workload,
+MainBench.hs:151-155).
 """
 
 import numpy as np
 import pytest
 
 from haskellpagerank_spark import oracle as O
+from haskellpagerank_spark.fixtures import fixture_text
 from haskellpagerank_spark.operators.graph import read_edge_list
 from haskellpagerank_spark.operators.pagerank import reference_config
 from haskellpagerank_spark.operators.pagerank_csr import run_pagerank_spmv
@@ -29,16 +31,7 @@ def _file_pairs(path):
     return out
 
 
-@pytest.mark.parametrize("name", [
-    "doubleSquareEA.txt",          # space-separated
-    "doubleSquareReversedEA.txt",
-    "twoNodesEA.txt",
-    "500nodes4color.txt",
-    "rmatTest3.txt",               # tab-separated, 50k edges
-    "rmatTest.txt",                # tab-separated, 200k edges
-])
-def test_bundled_graph_pagerank_matches_oracle(spark, name):
-    path = f"{INPUT}/{name}"
+def _check_file(spark, path):
     src, dst, n = O.parse_edges(_file_pairs(path))
     asrc, adst = O.amend_sinks(src, dst, n)
     want = O.pagerank_jacobi(asrc, adst, n, damping=0.15,
@@ -52,3 +45,22 @@ def test_bundled_graph_pagerank_matches_oracle(spark, name):
                                atol=1e-9)
     # reference test-suite invariant: rank sum ~ 1 (TestPageRank.hs:30-33)
     assert abs(pdf["rank"].sum() - 1.0) < 0.01
+
+
+@pytest.mark.parametrize("sep", [" ", "\t"], ids=["space", "tab"])
+@pytest.mark.parametrize("name", ["doubleSquare", "doubleSquareReversed"])
+def test_fixture_graph_file_pagerank_matches_oracle(spark, tmp_path, name,
+                                                    sep):
+    path = tmp_path / f"{name}EA.txt"
+    path.write_text(fixture_text(name, sep))
+    _check_file(spark, str(path))
+
+
+@pytest.mark.parametrize("name", [
+    "twoNodesEA.txt",
+    "500nodes4color.txt",
+    "rmatTest3.txt",               # tab-separated, 50k edges
+    "rmatTest.txt",                # tab-separated, 200k edges
+])
+def test_bundled_graph_pagerank_matches_oracle(spark, name):
+    _check_file(spark, f"{INPUT}/{name}")
