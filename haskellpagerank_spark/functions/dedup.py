@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from pyspark.sql import Column
 
+from ..session import local_df
 from .text import tokens
 
 _WS = r"\s+"
@@ -52,6 +53,20 @@ def _hash64(col: Column, salt: int | None = None,
         s = col if salt is None else F.concat_ws(
             "\x1f", col, F.lit(str(salt)))
         return F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("long")
+    raise ValueError(f"unknown hash_mode {hash_mode!r}")
+
+
+def _hash64_sql(expr: str, hash_mode: str = "xxhash64") -> str:
+    """Unsalted ``_hash64`` as SQL text over the SQL expression ``expr``.
+
+    The k-wide minhash and band-key projections are built from SQL text:
+    one ``F.expr`` per output column instead of five or six py4j calls,
+    which cost 0.5-1 s of driver time per 64-hash plan on a 4-vCPU host.
+    """
+    if hash_mode == "xxhash64":
+        return f"xxhash64({expr})"
+    if hash_mode == "md5":
+        return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
     raise ValueError(f"unknown hash_mode {hash_mode!r}")
 
 
@@ -151,17 +166,14 @@ def minhash_signatures(docs: DataFrame, text_col: str = "text",
         for i in range(num_hashes):
             a = ((i * 1103515245 + 12345) % (P - 1)) + 1
             b = (i * 40503 + 17) % P
-            mins.append(
-                F.min((F.lit(a) * F.col("_x") + F.lit(b)) % F.lit(P))
-                .alias(f"_m{i}"))
-    else:
-        mins = [F.min(_hash64(F.col("s"), i, hash_mode)).alias(f"_m{i}")
+            mins.append(F.expr(f"min(({a} * _x + {b}) % {P}) AS _m{i}"))
+    elif hash_mode == "xxhash64":
+        mins = [F.expr(f"min(xxhash64(s, {i})) AS _m{i}")
                 for i in range(num_hashes)]
-    return (
-        sh.groupBy("id").agg(*mins)
-        .select("id", F.array(*[f"_m{i}" for i in range(num_hashes)])
-                .alias("sig"))
-    )
+    else:
+        raise ValueError(f"unknown hash_mode {hash_mode!r}")
+    ms = ", ".join(f"_m{i}" for i in range(num_hashes))
+    return sh.groupBy("id").agg(*mins).selectExpr("id", f"array({ms}) AS sig")
 
 
 def band_keys(sigs: DataFrame, num_hashes: int, bands: int,
@@ -169,18 +181,17 @@ def band_keys(sigs: DataFrame, num_hashes: int, bands: int,
     """(id, band, key): 8-byte LSH bucket keys from minhash signatures —
     the only thing any LSH path ever shuffles besides doc ids."""
     rows_per_band = num_hashes // bands
-    return sigs.select(
-        "id",
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                _hash64(F.concat_ws(
-                    ",", *[F.element_at("sig", b * rows_per_band + r + 1)
-                           .cast("string") for r in range(rows_per_band)]
-                ), None, hash_mode).alias("key"),
-            ) for b in range(bands)
-        ])).alias("bk"),
-    ).select("id", "bk.band", "bk.key")
+
+    def key(b: int) -> str:
+        parts = ", ".join(
+            f"CAST(element_at(sig, {b * rows_per_band + r + 1}) AS STRING)"
+            for r in range(rows_per_band))
+        return _hash64_sql(f"concat_ws(',', {parts})", hash_mode)
+
+    structs = ", ".join(f"named_struct('band', {b}, 'key', {key(b)})"
+                        for b in range(bands))
+    return sigs.selectExpr("id", f"explode(array({structs})) AS bk") \
+        .select("id", "bk.band", "bk.key")
 
 
 def estimated_jaccard(sig_a, sig_b, num_hashes: int):
@@ -400,8 +411,8 @@ def sorted_neighborhood_pairs(docs: DataFrame, text_col: str = "text",
     for b, cnt in totals:
         offs.append((b, acc))
         acc += int(cnt)
-    off_df = F.broadcast(docs.sparkSession.createDataFrame(
-        offs, "_b string, _base long"))
+    off_df = F.broadcast(local_df(docs.sparkSession, offs,
+                                  "_b string, _base long"))
     win = Window.partitionBy("_b").orderBy("key", "id")
     ranked = (keyed.join(off_df, "_b")
               .select("id", (F.col("_base")

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_df
 from .dedup import exact_duplicate_groups  # noqa: F401  (re-export neighbor)
 from .text import fingerprint, lang_scores, quality_features
 
@@ -110,11 +111,11 @@ def stratified_topk(docs: DataFrame, k: int, stratum_col: str = "lang",
     bad = [r["stratum"] for r in check.where("under").collect()]
     if bad:
         fallback = base.join(
-            F.broadcast(base.sparkSession.createDataFrame(
-                [(s,) for s in bad], "stratum string")), "stratum")
+            F.broadcast(local_df(base.sparkSession, [(s,) for s in bad],
+                                 "stratum string")), "stratum")
         pruned = (pruned.join(F.broadcast(
-            pruned.sparkSession.createDataFrame(
-                [(s,) for s in bad], "stratum string")),
+            local_df(pruned.sparkSession, [(s,) for s in bad],
+                     "stratum string")),
             "stratum", "left_anti").select("stratum", "_id", "_key")
             .unionByName(fallback.select("stratum", "_id", "_key")))
     w = Window.partitionBy("stratum").orderBy("_key", "_id")
@@ -166,8 +167,8 @@ def pack_token_shards(docs: DataFrame, budget: int,
     for b, tot in bucket_totals:
         base.append((b, acc))
         acc += int(tot)
-    base_df = F.broadcast(docs.sparkSession.createDataFrame(
-        base, "_b long, _base long"))
+    base_df = F.broadcast(local_df(docs.sparkSession, base,
+                                   "_b long, _base long"))
     w = (Window.partitionBy("_b").orderBy("doc_id")
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     start = (F.col("_base") + F.sum("n_tokens").over(w)

@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..session import local_df
 from .graph import Graph
 from .structure import StructureResult
 
@@ -332,7 +333,8 @@ def anf_with_effdiam(g: Graph, radius: int, n_sketches: int = 8,
     balls = _estimate(state).select(
         F.lit("ball").alias("kind"), F.col("id"),
         F.col("ball_est").alias("val"))
-    extra = g.spark.createDataFrame(
+    extra = local_df(
+        g.spark,
         [("nf", t, v) for t, v in enumerate(nf)]
         + [("d90", -1, _round_half_up(d, 4))],
         "kind string, id bigint, val double")

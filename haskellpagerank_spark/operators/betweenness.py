@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..session import local_df
 from .graph import Graph
 from .structure import StructureResult
 
@@ -48,7 +49,7 @@ def betweenness(g: Graph, landmarks: list[int],
     e.count()
 
     lm_set = sorted({int(s) for s in landmarks})
-    lm_df = spark.createDataFrame([(s,) for s in lm_set], "id long")
+    lm_df = local_df(spark, [(s,) for s in lm_set], "id long")
     frontier = (
         g.vertices().join(lm_df, "id", "left_semi")
         .select(F.col("id").alias("lm"), "id",

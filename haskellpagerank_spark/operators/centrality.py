@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..session import local_df
 from .graph import Graph, invert, out_degrees
 from .pagerank import weighted_edges
 
@@ -74,13 +75,12 @@ def hits(g: Graph, num_iters: int = 10) -> CentralityResult:
     metrics: list[IterationMetrics] = []
     for it in range(1, num_iters + 1):
         t0 = time.monotonic()
+        # materialize each half-sweep: hub is built from the checkpointed
+        # authority, so no job recomputes the other half
         auth = _gather_normalize(edges, verts, hub, out_key="dst",
-                                 in_key="src")
+                                 in_key="src").localCheckpoint(eager=True)
         hub = _gather_normalize(edges, verts, auth, out_key="src",
-                                in_key="dst")
-        # one eager materialization per sweep truncates both lineages
-        hub = hub.localCheckpoint(eager=True)
-        auth = auth.localCheckpoint(eager=True)
+                                in_key="dst").localCheckpoint(eager=True)
         metrics.append(IterationMetrics(
             iteration=it, l1_residual=0.0, linf_residual=0.0,
             rows_shuffled=2 * (n_edges + g.num_vertices),
@@ -206,7 +206,7 @@ def bfs_distances(g: Graph, sources: list[int],
     if not sources:
         raise ValueError("bfs_distances needs at least one source")
     src_set = sorted({int(s) for s in sources})
-    seeds = g.spark.createDataFrame([(s,) for s in src_set], "id long")
+    seeds = local_df(g.spark, [(s,) for s in src_set], "id long")
     return bfs_distances_from(g, seeds, directed=directed,
                               max_depth=max_depth)
 

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..session import local_df
 from .components import IterativeResult
 from .graph import Graph, invert
 
@@ -195,8 +196,7 @@ def color_layout_1d(colors: DataFrame) -> DataFrame:
     for r in sizes:
         starts.append((r["color"], acc, r["length"]))
         acc += r["length"]
-    offsets = spark.createDataFrame(
-        starts, schema="color int, start long, length long")
+    offsets = local_df(spark, starts, "color int, start long, length long")
     w = Window.partitionBy("color").orderBy("id")
     return (
         colors.withColumn("rk", F.row_number().over(w) - 1)

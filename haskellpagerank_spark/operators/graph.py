@@ -20,6 +20,8 @@ from dataclasses import dataclass, replace
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_df
+
 EDGE_SCHEMA = "src LONG, dst LONG"
 
 
@@ -64,11 +66,11 @@ def from_edge_df(edges: DataFrame, num_vertices: int | None = None) -> Graph:
 
 
 def from_pairs(spark: SparkSession, pairs: list[tuple[int, int]]) -> Graph:
-    """Tiny-fixture constructor (tests)."""
-    df = spark.createDataFrame(
-        [(int(s), int(d)) for s, d in pairs] or [], schema=EDGE_SCHEMA
-    )
-    return from_edge_df(df)
+    """Tiny-fixture constructor (tests): a local relation, sized here from
+    the max id like ``from_edge_df`` (no job)."""
+    pairs = [(int(s), int(d)) for s, d in pairs]
+    return from_edge_df(local_df(spark, pairs, EDGE_SCHEMA),
+                        max((max(p) for p in pairs), default=-1) + 1)
 
 
 def read_edge_list(spark: SparkSession, path: str) -> Graph:

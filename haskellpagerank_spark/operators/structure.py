@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..session import local_df
 from .graph import Graph, invert, undirected_simple_edges
 from .triangles import triangles_per_vertex
 
@@ -432,7 +433,7 @@ def _landmark_distances(g: Graph, landmarks: list[int], directed: bool,
     e.count()
 
     lm_set = sorted({int(s) for s in landmarks})
-    lm_df = spark.createDataFrame([(s,) for s in lm_set], "id long")
+    lm_df = local_df(spark, [(s,) for s in lm_set], "id long")
     dist = (
         g.vertices().join(lm_df, "id", "left_semi")
         .select(F.col("id").alias("lm"), "id",
@@ -640,7 +641,8 @@ def graph_summary(g: Graph) -> DataFrame:
         F.max("deg").alias("max_out_deg"),
         F.count(F.lit(1)).alias("n_nonsink")).first()
     spark = g.spark
-    return spark.createDataFrame(
+    return local_df(
+        spark,
         [(
             g.num_vertices,
             n_edges_simple,
@@ -1197,8 +1199,7 @@ def trussness_local(g: Graph) -> StructureResult:
         [(u, v, t) for (u, v), t in sorted(tau.items())],
         columns=["src", "dst", "trussness"])
     if out.empty:
-        df = g.spark.createDataFrame(
-            [], "src LONG, dst LONG, trussness LONG")
+        df = local_df(g.spark, [], "src LONG, dst LONG, trussness LONG")
     else:
         df = g.spark.createDataFrame(out)
     return StructureResult(df=df, iterations=1, metrics=[IterationMetrics(

@@ -310,24 +310,24 @@ def _read_sig_store(sp: SparkSession, state_dir: str,
     segment (the per-row ``batch`` high-watermark column keeps the replay
     guard exact even after batches are folded together) plus any deltas
     newer than the newest segment."""
+    # one read per kind: each ``read.parquet`` call runs a schema job
     parts = []
     segments = _store_segments(sp, state_dir)
     k = segments[-1][1] if segments else None
-    for _, _, name in segments:
+    if segments:
         parts.append(
-            sp.read.parquet(f"{state_dir}/compacted/{name}")
+            sp.read.parquet(*(f"{state_dir}/compacted/{name}"
+                              for _, _, name in segments))
             .where(F.col("batch") < F.lit(batch_id))
             .select("id", "sig"))
-    for j in _store_deltas(sp, state_dir):
-        if (k is None or j > k) and j < batch_id:
-            parts.append(sp.read.parquet(f"{state_dir}/delta/batch={j}")
-                         .select("id", "sig"))
+    deltas = [f"{state_dir}/delta/batch={j}"
+              for j in _store_deltas(sp, state_dir)
+              if (k is None or j > k) and j < batch_id]
+    if deltas:
+        parts.append(sp.read.parquet(*deltas).select("id", "sig"))
     if not parts:
         return None
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    return parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
 
 
 def _maybe_compact_store(sp: SparkSession, state_dir: str,
@@ -408,14 +408,14 @@ def _maybe_compact_store(sp: SparkSession, state_dir: str,
         fold_bytes += seg_bytes
     new_lo = absorbed[-1][0] if absorbed else min(live)
     new_hi = max(live)
-    parts = [sp.read.parquet(f"{state_dir}/compacted/{name}")
-             .select("id", "sig", "batch") for _, _, name in absorbed]
-    for j in live:
-        parts.append(sp.read.parquet(f"{state_dir}/delta/batch={j}")
-                     .select("id", "sig", F.lit(j).alias("batch")))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
+    # the delta dir names carry the batch column (hive partitions)
+    df = (sp.read.option("basePath", f"{state_dir}/delta")
+          .parquet(*(f"{state_dir}/delta/batch={j}" for j in live))
+          .select("id", "sig", "batch"))
+    if absorbed:
+        df = sp.read.parquet(*(f"{state_dir}/compacted/{name}"
+                               for _, _, name in absorbed)) \
+            .select("id", "sig", "batch").unionByName(df)
     (df.repartition(compact_files, "id").sortWithinPartitions("id")
      .write.mode("overwrite")
      .parquet(f"{state_dir}/compacted/v={new_lo}-{new_hi}"))

@@ -11,6 +11,7 @@ import pandas as pd
 
 from haskellpagerank_spark.session import (
     driver_memory,
+    local_df,
     skip_unchanged_zip_rereads,
 )
 
@@ -98,3 +99,19 @@ def test_changed_zip_is_still_reread(tmp_path):
         [sys.executable, "-c", script, str(tmp_path / "mods.zip")],
         env=env, capture_output=True, text=True, timeout=120)
     assert proc.returncode == 0, proc.stderr[-4000:]
+
+
+def test_local_df_is_a_local_relation(spark):
+    """Small driver-side tables are read in the JVM (``LocalTableScan``),
+    not re-read through Python workers, and keep rows and types."""
+    schema = "id long, sig array<long>, t string, x double"
+    rows = [(1, [1, 2], "a", 0.5), (2, [], "b", -1.0)]
+    df = local_df(spark, rows, schema)
+    assert df.schema.simpleString() == (
+        "struct<id:bigint,sig:array<bigint>,t:string,x:double>")
+    assert sorted(map(tuple, df.collect())) == rows
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan, plan
+    empty = local_df(spark, [], "src long, dst long")
+    assert empty.count() == 0
+    assert empty.schema.simpleString() == "struct<src:bigint,dst:bigint>"

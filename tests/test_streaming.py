@@ -6,6 +6,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from haskellpagerank_spark.session import local_df
 from haskellpagerank_spark.sources.pages import extract_links, generate_pages
 from haskellpagerank_spark.streaming.ingest import (
     ingest_pages_to_edges, stream_edge_lists, windowed_event_counts)
@@ -288,7 +289,7 @@ def test_neardup_store_compaction_50_batches(spark, tmp_path):
         # maxFilesPerTrigger=1 the file source turns each into its own
         # micro-batch (file->batch order is the source's timestamp order,
         # so assertions below are order-robust)
-        spark.createDataFrame([(b, text)], schema) \
+        local_df(spark, [(b, text)], schema) \
             .coalesce(1).write.mode("append").parquet(in_dir)
 
     def drain():
