@@ -13,6 +13,8 @@ the loader's self-loop filter is itself under test.
 
 from __future__ import annotations
 
+import numpy as np
+
 FIXTURE_EDGES: dict[str, list[tuple[int, int]]] = {
     "singleEdge": [(0, 1)],
     "simpleGraphOneNodeMissing": [(1, 2)],
@@ -81,6 +83,30 @@ DIST2_GOLDEN: dict[str, list[int]] = {
 }
 
 
+def standin_pairs(name: str, seed: int = 0) -> list[tuple[int, int]]:
+    """Seeded stand-ins for reference input files this repo does not ship:
+    ``twoNodes`` (a 2-cycle); ``500nodes4color`` (4 out-edges per vertex,
+    each joining different colours of ``id % 4``); ``rmat50k`` /
+    ``rmat200k`` (R-MAT, a, b, c, d = .57, .19, .19, .05, over 2^14 / 2^16
+    ids, self-loops and duplicates kept)."""
+    rng = np.random.default_rng(seed)
+    if name == "twoNodes":
+        return [(0, 1), (1, 0)]
+    if name == "500nodes4color":
+        src = np.repeat(np.arange(500), 4)
+        k = rng.integers(1, 500, len(src))
+        k += k % 4 == 0  # 4 | 500, so (u + k) % 500 keeps a colour apart
+        dst = (src + k) % 500
+    else:
+        m, scale = {"rmat50k": (50_000, 14), "rmat200k": (200_000, 16)}[name]
+        quad = rng.choice(4, size=(scale, m), p=[0.57, 0.19, 0.19, 0.05])
+        bit = 1 << np.arange(scale)[:, None]
+        src, dst = ((quad >> 1) * bit).sum(0), ((quad & 1) * bit).sum(0)
+    return list(zip(src.tolist(), dst.tolist()))
+
+
 def fixture_text(name: str, sep: str = " ") -> str:
-    """Render a fixture as reference edge-list text (one 'src dst' per line)."""
-    return "\n".join(f"{s}{sep}{d}" for s, d in FIXTURE_EDGES[name]) + "\n"
+    """Render a fixture, or else a stand-in, as reference edge-list text
+    (one 'src dst' per line)."""
+    pairs = FIXTURE_EDGES.get(name) or standin_pairs(name)
+    return "".join(f"{s}{sep}{d}\n" for s, d in pairs)

@@ -1,9 +1,9 @@
 """CSR-block connected components — SpMV-style min-label propagation.
 
-Same physical layout as pagerank_csr (per-block contiguous buffers over the
-*undirected* edge set, dst-partitioned so per-block candidate minima are
-final) with the broadcast-vector vertex-mirror pattern: one zero-shuffle
-Spark job per sweep computing
+pagerank_csr's block build over the *undirected* edge set (edges unioned
+with their transpose; dst-partitioned, so per-block candidate minima are
+final; multiplicities ignored) and its cached decoded-block sweep, one
+zero-shuffle job per sweep with the labels broadcast, computing
 
     cand_v = min over in-neighbors u of label_u     (np.minimum.reduceat)
     label'_v = min(label_v, cand_v)                  (driver, dense numpy)
@@ -17,57 +17,14 @@ Same scale envelope as SpMV PageRank: broadcast = 8|V| bytes, use below
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
 
 from ..plans.checkpoint import IterationMetrics
-from ..session import skip_unchanged_zip_rereads
 from .components import IterativeResult
 from .graph import Graph, invert
-from .pagerank_csr import BLOCK_SCHEMA
-
-
-def _build_blocks_und(g: Graph, num_blocks: int):
-    """Undirected edge set -> per-block buffers in ONE shuffle: union with
-    the transposed edges (a projection), hash-repartition by dst, and dedup
-    (src, dst) pairs inside the whole-partition numpy kernel — no
-    dropDuplicates exchange, no groupBy machinery (weights unused: min is
-    idempotent under duplicates anyway, dedup just shrinks the buffers)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        skip_unchanged_zip_rereads()
-        srcs, dsts = [], []
-        for p in batches:
-            srcs.append(p["src"].to_numpy(np.int64))
-            dsts.append(p["dst"].to_numpy(np.int64))
-        if sum(map(len, srcs)) == 0:
-            return
-        src = np.concatenate(srcs)
-        dst = np.concatenate(dsts)
-        order = np.lexsort((src, dst))
-        src, dst = src[order], dst[order]
-        head = np.empty(len(dst), dtype=bool)
-        head[0] = True
-        head[1:] = (dst[1:] != dst[:-1]) | (src[1:] != src[:-1])
-        src, dst = src[head], dst[head]
-        uniq, offsets = np.unique(dst, return_index=True)
-        usrcs, src_pos = np.unique(src, return_inverse=True)
-        yield pd.DataFrame({
-            "block": [-1],
-            "dsts": [uniq.tobytes()],
-            "offsets": [offsets.astype(np.int64).tobytes()],
-            "usrcs": [usrcs.tobytes()],
-            "src_pos": [src_pos.astype(np.int32).tobytes()],
-            "w": [b""],
-        })
-
-    und = g.edges.select("src", "dst").unionAll(invert(g.edges))
-    return (
-        und.repartition(num_blocks, "dst")
-        .mapInPandas(kernel, schema=BLOCK_SCHEMA)
-    )
+from .pagerank_csr import build_csr_blocks, decoded_blocks, sweep_blocks
 
 
 def connected_components_spmv(g: Graph, max_iters: int = 200,
@@ -77,69 +34,44 @@ def connected_components_spmv(g: Graph, max_iters: int = 200,
     n = g.num_vertices
     num_blocks = num_blocks or int(
         spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    blocks = _build_blocks_und(g, num_blocks).persist()
-    blocks.count()
-    sc = spark.sparkContext
+    und = g.edges.select("src", "dst").unionAll(invert(g.edges))
+    blocks = decoded_blocks(build_csr_blocks(und, num_blocks))
 
     labels = np.arange(n, dtype=np.int64)
     metrics: list[IterationMetrics] = []
     it = 0
-    while it < max_iters:
-        it += 1
-        t0 = time.monotonic()
-        bc = sc.broadcast(labels)
+    try:
+        while it < max_iters:
+            it += 1
+            t0 = time.monotonic()
+            ids, cands = sweep_blocks(blocks, labels, np.minimum,
+                                      weighted=False)
+            new = labels.copy()
+            if len(ids):
+                # sorted run-min then a vectorized compare-update — orders
+                # of magnitude faster than np.minimum.at (unbuffered ufunc.at)
+                order = np.argsort(ids, kind="stable")
+                ids_s, c_s = ids[order], cands[order]
+                head = np.empty(len(ids_s), dtype=bool)
+                head[0] = True
+                head[1:] = ids_s[1:] != ids_s[:-1]
+                starts = np.flatnonzero(head)
+                mins = np.minimum.reduceat(c_s, starts)
+                uids = ids_s[starts]
+                sel = mins < new[uids]
+                new[uids[sel]] = mins[sel]
+            changed = int((new != labels).sum())
+            metrics.append(IterationMetrics(
+                iteration=it, l1_residual=float(changed),
+                linf_residual=float(1 if changed else 0), rows_shuffled=0,
+                wall_s=time.monotonic() - t0,
+                extra={"changed": changed, "strategy": "spmv"}))
+            labels = new
+            if changed == 0:
+                break
+    finally:
+        blocks.unpersist()
 
-        def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            skip_unchanged_zip_rereads()
-            x = bc.value
-            for pdf in batches:
-                ids, mins = [], []
-                for row in pdf.itertuples(index=False):
-                    uniq = np.frombuffer(row.dsts, dtype=np.int64)
-                    if len(uniq) == 0:
-                        continue
-                    offs = np.frombuffer(row.offsets, dtype=np.int64)
-                    usrcs = np.frombuffer(row.usrcs, dtype=np.int64)
-                    src_pos = np.frombuffer(row.src_pos, dtype=np.int32)
-                    ids.append(uniq)
-                    mins.append(np.minimum.reduceat(x[usrcs][src_pos], offs))
-                if not ids:
-                    yield pd.DataFrame({"id": pd.Series([], dtype="int64"),
-                                        "cand": pd.Series([], dtype="int64")})
-                    continue
-                yield pd.DataFrame({"id": np.concatenate(ids),
-                                    "cand": np.concatenate(mins)})
-
-        out = blocks.mapInPandas(
-            kernel, schema="id long, cand long").toPandas()
-        bc.destroy()
-        new = labels.copy()
-        ids = out["id"].to_numpy(np.int64)
-        if len(ids):
-            # sorted run-min then a vectorized compare-update — orders of
-            # magnitude faster than np.minimum.at (unbuffered ufunc.at)
-            cands = out["cand"].to_numpy(np.int64)
-            order = np.argsort(ids, kind="stable")
-            ids_s, c_s = ids[order], cands[order]
-            head = np.empty(len(ids_s), dtype=bool)
-            head[0] = True
-            head[1:] = ids_s[1:] != ids_s[:-1]
-            starts = np.flatnonzero(head)
-            mins = np.minimum.reduceat(c_s, starts)
-            uids = ids_s[starts]
-            sel = mins < new[uids]
-            new[uids[sel]] = mins[sel]
-        changed = int((new != labels).sum())
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=float(changed),
-            linf_residual=float(1 if changed else 0), rows_shuffled=0,
-            wall_s=time.monotonic() - t0,
-            extra={"changed": changed, "strategy": "spmv"}))
-        labels = new
-        if changed == 0:
-            break
-
-    blocks.unpersist()
     df = spark.createDataFrame(pd.DataFrame({
         "id": np.arange(n, dtype=np.int64), "component": labels}))
     return IterativeResult(df=df, iterations=it, metrics=metrics)

@@ -6,7 +6,7 @@ as a *per-partition physical layout*: edges are hash-partitioned by dst
 block, each block stored ONCE as contiguous numpy buffers (sorted dst run
 -> unique dst ids + reduceat offsets + src ids + weights). A sweep is then
 
-    for each block (in parallel, Arrow-batched):  msg = w * x[srcs]
+    for each block (in parallel):  msg = w * x[srcs]
         per-dst sums via np.add.reduceat           # sparse gather-scatter
     new_x = f(msg)                                 # driver, dense numpy
 
@@ -14,16 +14,23 @@ with the current rank vector distributed as a broadcast (vertex-mirror
 pattern, a la GraphX replicated vertex views): zero shuffle per iteration,
 one Spark job, no per-row Python.
 
+Cached decoded blocks: the Arrow ``mapInPandas`` build is persisted, then
+decoded ONCE into a cached RDD of per-block numpy tuples and released
+(``decoded_blocks``). Each sweep is one ``RDD.mapPartitions`` job over that
+cache (``sweep_blocks``): no DataFrame plan, Arrow round trip or decode per
+sweep. Decoding from the persisted blocks, not in the build's own task,
+keeps one Python worker per task (see session.py on worker pools).
+
 Scale envelope (explicit, by design):
 - every sweep moves O(|V|) through the driver twice: the 8|V|-byte rank
-  broadcast out, and the ~|V|-row Arrow collect of per-block partial sums
-  back (bounded by |V| plus hub-salt duplicates). Both are fine to ~10^7
-  vertices (~0.25 GB/sweep through one driver); beyond that the driver hop
-  dominates, so use strategy="join" (operators/pagerank.py), whose
-  shuffle-based gather has no single-machine O(|V|) state.
+  broadcast out, and the ~|V| (id, partial sum) pairs of the per-block
+  collect back (bounded by |V| plus hub-salt duplicates). Both are fine to
+  ~10^7 vertices (~0.25 GB/sweep through one driver); beyond that the
+  driver hop dominates, so use strategy="join" (operators/pagerank.py),
+  whose shuffle-based gather has no single-machine O(|V|) state.
   ``run_pagerank_auto`` picks via SPMV_MAX_VERTICES.
 - block build is one shuffle of the weighted edge set (same cost as a single
-  join-path sweep) and amortizes over all iterations.
+  join-path sweep) plus one decode pass, and amortizes over all iterations.
 - per-block buffers are bounded by edges-per-block; ``num_blocks`` scales
   with the cluster (default = shuffle partitions) so blocks fit comfortably
   in executor memory (100 TB / 10k blocks ~ 10 GB raw -> use 10^5 blocks at
@@ -43,6 +50,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import RDD, StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -51,17 +59,17 @@ from ..session import skip_unchanged_zip_rereads
 from .graph import Graph, amend_sinks
 from .pagerank import PageRankConfig, PageRankResult
 
-BLOCK_SCHEMA = ("block int, dsts binary, offsets binary, usrcs binary, "
-                "src_pos binary, w binary")
+BLOCK_SCHEMA = ("dsts binary, offsets binary, usrcs binary, src_pos binary, "
+                "w binary")
 
 
-def build_csr_blocks(work: Graph, num_blocks: int,
+def build_csr_blocks(edges: DataFrame, num_blocks: int,
                      hub_ids: "np.ndarray | None" = None,
                      salt_k: int = 8) -> DataFrame:
-    """One-time physical build: ONE shuffle of the raw (src, dst) pairs,
-    hash-partitioned by dst (no two partitions share a dst, so per-block
-    partial sums ARE the final sums), then a whole-partition numpy kernel
-    that run-length-dedups duplicate edges into float multiplicities.
+    """One-time physical build over (src, dst) ``edges``: ONE shuffle of the
+    raw pairs, hash-partitioned by dst (no two partitions share a dst, so
+    per-block partial sums ARE the final sums), then a whole-partition numpy
+    kernel that run-length-dedups duplicate edges into multiplicities ``w``.
 
     The 1/outdeg weighting is NOT stored: each sweep broadcasts x/outdeg
     (the dense degree vector already lives on the driver), which removes
@@ -83,8 +91,7 @@ def build_csr_blocks(work: Graph, num_blocks: int,
         for p in batches:
             srcs.append(p["src"].to_numpy(np.int64))
             dsts.append(p["dst"].to_numpy(np.int64))
-        total = sum(map(len, srcs))
-        if total == 0:
+        if not sum(map(len, srcs)):
             return
         src = np.concatenate(srcs)
         dst = np.concatenate(dsts)
@@ -104,7 +111,6 @@ def build_csr_blocks(work: Graph, num_blocks: int,
         # array, instead of random-accessing the full x per edge
         usrcs, src_pos = np.unique(src_u, return_inverse=True)
         yield pd.DataFrame({
-            "block": [-1],
             "dsts": [uniq.tobytes()],
             "offsets": [offsets.astype(np.int64).tobytes()],
             "usrcs": [usrcs.tobytes()],
@@ -112,7 +118,7 @@ def build_csr_blocks(work: Graph, num_blocks: int,
             "w": [cnt.tobytes()],
         })
 
-    edges = work.edges.select("src", "dst")
+    edges = edges.select("src", "dst")
     if hub_ids is not None and len(hub_ids):
         spark = edges.sparkSession
         hubs = spark.createDataFrame(
@@ -130,35 +136,61 @@ def build_csr_blocks(work: Graph, num_blocks: int,
     return part.select("src", "dst").mapInPandas(kernel, schema=BLOCK_SCHEMA)
 
 
-def _spmv_job(blocks: DataFrame, x_bc) -> tuple[np.ndarray, np.ndarray]:
-    """One distributed gather-scatter sweep -> (dst ids, partial sums)."""
+_BLOCK_DTYPES = (np.int64, np.int64, np.int64, np.int32, np.float64)
+# memory, deserialized: the JVM keeps the pickled blocks as byte arrays. A
+# serialized level runs them through Kryo, whose first use in a session
+# cost about 0.3 s of the build.
+_BLOCKS_LEVEL = StorageLevel(False, True, False, True)
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _decode(rows):
+    skip_unchanged_zip_rereads()
+    for r in rows:  # BLOCK_SCHEMA order
+        yield tuple(np.frombuffer(b, t) for b, t in zip(r, _BLOCK_DTYPES))
+
+
+def decoded_blocks(raw: DataFrame) -> RDD:
+    """Persist the Arrow block build ``raw``, decode it once into a cached
+    RDD of ``(dsts, offsets, usrcs, src_pos, w)`` numpy tuples, release
+    ``raw``; the caller unpersists the result. The count is JVM-side: a
+    Python action would hold a second Python worker per task."""
+    raw = raw.persist()
+    try:
+        raw.count()
+        blocks = raw.rdd.mapPartitions(_decode).persist(_BLOCKS_LEVEL)
+        try:
+            blocks._jrdd.count()
+        except BaseException:
+            blocks.unpersist()
+            raise
+    finally:
+        raw.unpersist()
+    return blocks
+
+
+def sweep_blocks(blocks: RDD, x: np.ndarray, reduce: np.ufunc = np.add,
+                 weighted: bool = True) -> tuple[np.ndarray, np.ndarray]:
+    """One distributed gather-scatter sweep over ``decoded_blocks``: per
+    block, ``reduce`` over each dst's run of (``w``-weighted) source values
+    of ``x`` -> (dst ids, per-dst results), concatenated in block order."""
+    bc = blocks.context.broadcast(x)
+
+    def kernel(parts):
         skip_unchanged_zip_rereads()
-        x = x_bc.value
-        for pdf in batches:
-            ids, msgs = [], []
-            for row in pdf.itertuples(index=False):
-                uniq = np.frombuffer(row.dsts, dtype=np.int64)
-                offs = np.frombuffer(row.offsets, dtype=np.int64)
-                usrcs = np.frombuffer(row.usrcs, dtype=np.int64)
-                src_pos = np.frombuffer(row.src_pos, dtype=np.int32)
-                w = np.frombuffer(row.w, dtype=np.float64)
-                if len(uniq) == 0:
-                    continue
-                x_local = x[usrcs]          # one gather from the big vector
-                vals = w * x_local[src_pos]  # cache-resident inner gather
-                ids.append(uniq)
-                msgs.append(np.add.reduceat(vals, offs))
-            if not ids:
-                yield pd.DataFrame({"id": pd.Series([], dtype="int64"),
-                                    "msg": pd.Series([], dtype="float64")})
-                continue
-            yield pd.DataFrame({"id": np.concatenate(ids),
-                                "msg": np.concatenate(msgs)})
+        v = bc.value
+        for dsts, offs, usrcs, src_pos, w in parts:
+            x_local = v[usrcs]          # one gather from the big vector
+            vals = x_local[src_pos]     # cache-resident inner gather
+            yield dsts, reduce.reduceat(w * vals if weighted else vals, offs)
 
-    out = blocks.mapInPandas(kernel, schema="id long, msg double").toPandas()
-    return out["id"].to_numpy(np.int64), out["msg"].to_numpy(np.float64)
+    try:
+        out = blocks.mapPartitions(kernel).collect()
+    finally:
+        bc.destroy()
+    if not out:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=x.dtype)
+    ids, vals = zip(*out)
+    return np.concatenate(ids), np.concatenate(vals)
 
 
 def run_pagerank_spmv(g: Graph, cfg: PageRankConfig | None = None,
@@ -216,9 +248,6 @@ def run_pagerank_spmv(g: Graph, cfg: PageRankConfig | None = None,
             hub_ids = indeg_pdf.loc[indeg_pdf["deg"] > hub_threshold,
                                     "id"].to_numpy(np.int64)
 
-    blocks = build_csr_blocks(work, num_blocks, hub_ids=hub_ids).persist()
-    blocks.count()  # materialize once
-
     d = cfg.damping
     init = cfg.init_value if cfg.init_value is not None else 1.0 / n
     dconst = (1.0 - d) / n_nonsink if n_nonsink else 0.0
@@ -242,7 +271,6 @@ def run_pagerank_spmv(g: Graph, cfg: PageRankConfig | None = None,
         return spark.createDataFrame(
             pd.DataFrame({"id": np.arange(n, dtype=np.int64), "rank": vec}))
 
-    sc = spark.sparkContext
     metrics: list[IterationMetrics] = []
     total_iters = cfg.num_iters if cfg.num_iters > 0 else cfg.max_iters
     if cfg.num_iters == 0 and start_iter >= total_iters:
@@ -251,57 +279,53 @@ def run_pagerank_spmv(g: Graph, cfg: PageRankConfig | None = None,
         total_iters = start_iter + 1
     it = start_iter
     prev = x
-    while it < total_iters:
-        it += 1
-        t0 = time.monotonic()
-        # fold the 1/outdeg weighting into the broadcast (blocks store raw
-        # multiplicities): msg_v = sum w_uv * x_u / outdeg_u
-        y = np.divide(x, outdeg, out=np.zeros(n), where=has_out)
-        bc = sc.broadcast(y)
-        ids, msgs = _spmv_job(blocks, bc)
-        bc.destroy()
-        # bincount sums per-dst partials — exact when salted hubs span blocks
-        msg = (np.bincount(ids, weights=msgs, minlength=n)
-               if len(ids) else np.zeros(n))
-        if cfg.sink_mode == "redistribute":
-            dangling = float(x[~has_out].sum())
-            new = (1.0 - d) / n + d * (msg + dangling / n)
-        else:
-            new = dconst + d * msg
-            new[~has_out] = 0.0
-        diff = np.abs(new - x)
-        l1, linf = float(diff.sum()), float(diff.max())
-        m = IterationMetrics(
-            iteration=it, l1_residual=l1, linf_residual=linf,
-            rows_shuffled=0, wall_s=time.monotonic() - t0,
-            extra={"edges_processed": n_edges, "strategy": "spmv"},
-        )
-        metrics.append(m)
-        if cfg.checkpoint_dir:
-            snap = ckpt.should_snapshot(it)
-            ckpt.write(to_df(new) if snap else None, m, snapshot=snap)
-        converged = (linf if cfg.tol_norm == "linf" else l1) <= cfg.tol
-        prev, x = x, new
-        if cfg.num_iters == 0 and converged:
-            final = prev if cfg.return_previous_on_converge else x
-            blocks.unpersist()
-            return PageRankResult(ranks=to_df(final), iterations=it,
-                                  metrics=metrics)
+    blocks = decoded_blocks(
+        build_csr_blocks(work.edges, num_blocks, hub_ids=hub_ids))
+    try:
+        while it < total_iters:
+            it += 1
+            t0 = time.monotonic()
+            # fold the 1/outdeg weighting into the broadcast (blocks store
+            # raw multiplicities): msg_v = sum w_uv * x_u / outdeg_u
+            y = np.divide(x, outdeg, out=np.zeros(n), where=has_out)
+            ids, msgs = sweep_blocks(blocks, y)
+            # bincount sums per-dst partials: exact across salted hub blocks
+            msg = (np.bincount(ids, weights=msgs, minlength=n)
+                   if len(ids) else np.zeros(n))
+            if cfg.sink_mode == "redistribute":
+                dangling = float(x[~has_out].sum())
+                new = (1.0 - d) / n + d * (msg + dangling / n)
+            else:
+                new = dconst + d * msg
+                new[~has_out] = 0.0
+            diff = np.abs(new - x)
+            l1, linf = float(diff.sum()), float(diff.max())
+            m = IterationMetrics(
+                iteration=it, l1_residual=l1, linf_residual=linf,
+                rows_shuffled=0, wall_s=time.monotonic() - t0,
+                extra={"edges_processed": n_edges, "strategy": "spmv"},
+            )
+            metrics.append(m)
+            if cfg.checkpoint_dir:
+                snap = ckpt.should_snapshot(it)
+                ckpt.write(to_df(new) if snap else None, m, snapshot=snap)
+            converged = (linf if cfg.tol_norm == "linf" else l1) <= cfg.tol
+            prev, x = x, new
+            if cfg.num_iters == 0 and converged:
+                final = prev if cfg.return_previous_on_converge else x
+                return PageRankResult(ranks=to_df(final), iterations=it,
+                                      metrics=metrics)
+    finally:
+        blocks.unpersist()
 
-    blocks.unpersist()
     if cfg.num_iters == 0:
         raise RuntimeError(
             f"pagerank_spmv did not converge within max_iters={cfg.max_iters}")
     return PageRankResult(ranks=to_df(x), iterations=it, metrics=metrics)
 
 
-# crossover guide: each sweep moves O(|V|) through the driver twice — the
-# 8|V|-byte rank broadcast out and the ~|V|-row Arrow collect of per-block
-# partial sums back (bounded by |V| + hub-salt duplicates). At 1e7 vertices
-# that is ~80 MB+160 MB per sweep through one driver — comfortably inside a
-# driver's NIC/second; at 1e8 it is the bottleneck. The shuffle-join path has
-# no single-machine O(|V|) state, so it takes over beyond this crossover
-# (measured handoff: BENCH/BASELINE.md §5).
+# crossover: the O(|V|) per-sweep driver hop of the module docstring's scale
+# envelope (measured handoff: BENCH/BASELINE.md §5)
 SPMV_MAX_VERTICES = 10_000_000
 
 

@@ -31,6 +31,15 @@ able to (``spark-submit --py-files`` with the engine zip, or the package on
 the workers' ``PYTHONPATH`` or working directory), as the
 ``sources/pages.py`` kernels already require.
 
+Python worker pools. Spark keeps a Python worker pool per worker
+environment, and its SQL runners (``mapInPandas`` and the other Arrow UDFs)
+add ``SPARK_SIMPLIFIED_TRACEBACK`` to theirs while ``SIMPLIFIED_TRACEBACK``
+is on (the default) and RDD runners do not: the first ``RDD.mapPartitions``
+job started a second daemon and a worker per core. ``get_spark`` sets the
+variable for all runners then, so they share one pool. Within a task, a
+Python RDD stage over an unpersisted ``mapInPandas`` frame holds two
+workers, so decode from a persisted frame, as the CSR SpMV build does.
+
 Small driver-side tables. ``spark.createDataFrame(list)`` turns the rows
 into an RDD of pickled batches that every scan re-reads through Python
 workers, one Python task per partition in every job that touches it: a
@@ -50,6 +59,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
 
 MAX_DRIVER_MEM_MB = 48 * 1024
+SIMPLIFIED_TRACEBACK = (
+    "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled")
 
 
 def default_parallelism() -> int:
@@ -142,7 +153,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for k, v in (extra_conf or {}).items():
+    extra_conf = extra_conf or {}
+    if extra_conf.get(SIMPLIFIED_TRACEBACK, "true").lower() == "true":
+        # one Python worker pool for SQL and RDD jobs (module docstring)
+        builder = builder.config(
+            "spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -31,3 +31,14 @@ def test_spmv_cc_disconnected(spark):
     g = from_pairs(spark, pairs)
     got = connected_components_spmv(g).df.toPandas().sort_values("id")
     assert got["component"].tolist() == [0, 0, 0, 3, 3, 3, 6]
+
+
+def test_spmv_cc_leaves_no_cached_blocks(spark):
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    before = persisted()
+    connected_components_spmv(from_pairs(spark, FIXTURE_EDGES["princeton"]))
+    assert persisted() <= before

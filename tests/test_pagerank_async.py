@@ -15,6 +15,8 @@ Three layers of evidence:
      changes the schedule, never the fixpoint).
 """
 
+import os
+
 import numpy as np
 import pytest
 
@@ -38,6 +40,16 @@ def _amended(name):
     src, dst, n = oracle.parse_edges(fixtures.FIXTURE_EDGES[name])
     asrc, adst = oracle.amend_sinks(src, dst, n)
     return asrc, adst, n
+
+
+def _file_pairs(path):
+    pairs = []
+    with open(path) as fh:
+        for line in fh:
+            p = line.split()
+            if len(p) == 2:
+                pairs.append((int(p[0]), int(p[1])))
+    return pairs
 
 
 def _random_digraph(n, p, seed):
@@ -165,17 +177,10 @@ def test_any_block_count_converges_to_jacobi_fixpoint(spark, b):
 # ---------------------------------------------------------------- bundled
 # reference inputs (the regime the reference's own async tests exercise)
 
-def test_bundled_500nodes_sequential_regime(spark):
+def _check_sequential_regime(spark, path):
     # 500 < 7000: the reference async pagerank IS sequential here, so
     # num_blocks=None dispatches to the exact deterministic path
-    path = f"{INPUT}/500nodes4color.txt"
-    pairs = []
-    with open(path) as fh:
-        for line in fh:
-            p = line.split()
-            if len(p) == 2:
-                pairs.append((int(p[0]), int(p[1])))
-    src, dst, n = oracle.parse_edges(pairs)
+    src, dst, n = oracle.parse_edges(_file_pairs(path))
     asrc, adst = oracle.amend_sinks(src, dst, n)
     want = oracle.pagerank_gauss_seidel(asrc, adst, n, damping=0.15,
                                         eps=1e-4, init=1.0 / n)
@@ -189,16 +194,9 @@ def test_bundled_500nodes_sequential_regime(spark):
     assert abs(got.sum() - 1.0) < 0.01  # TestPageRank.hs sum oracle
 
 
-def test_bundled_rmat3_multi_block(spark):
-    # 50k-edge bundled graph, 8 chunks, 2 sweeps vs the block oracle
-    path = f"{INPUT}/rmatTest3.txt"
-    pairs = []
-    with open(path) as fh:
-        for line in fh:
-            p = line.split()
-            if len(p) == 2:
-                pairs.append((int(p[0]), int(p[1])))
-    src, dst, n = oracle.parse_edges(pairs)
+def _check_multi_block(spark, path):
+    # 50k-edge graph, 8 chunks, 2 sweeps vs the block oracle
+    src, dst, n = oracle.parse_edges(_file_pairs(path))
     asrc, adst = oracle.amend_sinks(src, dst, n)
     want = oracle.pagerank_block_gs(asrc, adst, n, 8, damping=0.15,
                                     init=1.0 / n, num_iters=2)
@@ -207,6 +205,28 @@ def test_bundled_rmat3_multi_block(spark):
         damping=0.15, num_iters=2, sink_mode="reflect", init_value=1.0 / n),
         num_blocks=8)
     assert np.allclose(rank_vector(res, n), want, atol=1e-12)
+
+
+def test_standin_500nodes_sequential_regime(spark, tmp_path):
+    path = tmp_path / "500nodes4color.txt"
+    path.write_text(fixtures.fixture_text("500nodes4color"))
+    _check_sequential_regime(spark, str(path))
+
+
+def test_standin_rmat50k_multi_block(spark, tmp_path):
+    path = tmp_path / "rmat50k.txt"
+    path.write_text(fixtures.fixture_text("rmat50k", "\t"))
+    _check_multi_block(spark, str(path))
+
+
+@pytest.mark.skipif(not os.path.isdir(INPUT), reason=f"no {INPUT}")
+def test_bundled_500nodes_sequential_regime(spark):
+    _check_sequential_regime(spark, f"{INPUT}/500nodes4color.txt")
+
+
+@pytest.mark.skipif(not os.path.isdir(INPUT), reason=f"no {INPUT}")
+def test_bundled_rmat3_multi_block(spark):
+    _check_multi_block(spark, f"{INPUT}/rmatTest3.txt")
 
 
 # ---------------------------------------------------------------- plumbing

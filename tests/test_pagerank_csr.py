@@ -70,6 +70,32 @@ def test_spmv_checkpoint_resume(spark, tmp_path):
         _ranks(resumed, g.num_vertices), _ranks(plain, g.num_vertices))
 
 
+def test_spmv_leaves_no_cached_blocks(spark, tmp_path):
+    """Every exit path releases the decoded blocks: a converged run, a
+    fixed-sweep run, a checkpoint resume and the did-not-converge error all
+    leave the session's persisted RDDs as they found them."""
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    g = from_pairs(spark, FIXTURE_EDGES["hub"] + FIXTURE_EDGES["doubleSquare"])
+    ck = str(tmp_path / "ck")
+    before = persisted()
+    run_pagerank_spmv(g, PageRankConfig(tol=1e-10))
+    assert persisted() <= before
+    run_pagerank_spmv(g, PageRankConfig(num_iters=3, checkpoint_dir=ck,
+                                        checkpoint_interval=1))
+    assert persisted() <= before
+    resumed = run_pagerank_spmv(g, PageRankConfig(
+        num_iters=5, checkpoint_dir=ck, checkpoint_interval=1))
+    assert resumed.metrics[0].iteration == 4
+    assert persisted() <= before
+    with pytest.raises(RuntimeError, match="did not converge"):
+        run_pagerank_spmv(g, PageRankConfig(tol=0.0, max_iters=2))
+    assert persisted() <= before
+
+
 def test_auto_dispatch_tiers(spark):
     """run_pagerank_auto: local tier below the edge cap (COST regime);
     forcing the cap to 0 falls through to the SpMV tier."""

@@ -115,3 +115,22 @@ def test_local_df_is_a_local_relation(spark):
     empty = local_df(spark, [], "src long, dst long")
     assert empty.count() == 0
     assert empty.schema.simpleString() == "struct<src:bigint,dst:bigint>"
+
+
+def test_rdd_jobs_share_the_sql_worker_pool(spark):
+    """Spark keys its Python worker pools by environment. With the session's
+    ``SPARK_SIMPLIFIED_TRACEBACK`` executor setting an RDD task runs in a
+    worker forked by the daemon that serves ``mapInPandas`` tasks, instead
+    of a second daemon with its own workers."""
+    n = spark.sparkContext.defaultParallelism
+
+    def sql_kernel(batches):
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"ppid": [os.getppid()]})
+
+    sql = set(spark.range(0, n, numPartitions=n)
+              .mapInPandas(sql_kernel, "ppid long").toPandas()["ppid"])
+    rdd = set(spark.sparkContext.parallelize(range(n), n)
+              .mapPartitions(lambda _: [os.getppid()]).collect())
+    assert rdd <= sql, (rdd, sql)
