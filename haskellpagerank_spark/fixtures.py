@@ -83,13 +83,13 @@ DIST2_GOLDEN: dict[str, list[int]] = {
 }
 
 
-def standin_pairs(name: str, seed: int = 0) -> list[tuple[int, int]]:
+def standin_pairs(name: str) -> list[tuple[int, int]]:
     """Seeded stand-ins for reference input files this repo does not ship:
     ``twoNodes`` (a 2-cycle); ``500nodes4color`` (4 out-edges per vertex,
     each joining different colours of ``id % 4``); ``rmat50k`` /
     ``rmat200k`` (R-MAT, a, b, c, d = .57, .19, .19, .05, over 2^14 / 2^16
     ids, self-loops and duplicates kept)."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(0)
     if name == "twoNodes":
         return [(0, 1), (1, 0)]
     if name == "500nodes4color":

@@ -14,12 +14,13 @@ with the current rank vector distributed as a broadcast (vertex-mirror
 pattern, a la GraphX replicated vertex views): zero shuffle per iteration,
 one Spark job, no per-row Python.
 
-Cached decoded blocks: the Arrow ``mapInPandas`` build is persisted, then
-decoded ONCE into a cached RDD of per-block numpy tuples and released
-(``decoded_blocks``). Each sweep is one ``RDD.mapPartitions`` job over that
-cache (``sweep_blocks``): no DataFrame plan, Arrow round trip or decode per
-sweep. Decoding from the persisted blocks, not in the build's own task,
-keeps one Python worker per task (see session.py on worker pools).
+Cached decoded blocks: the Arrow ``mapInPandas`` build is persisted,
+decoded ONCE into a cached RDD of per-block numpy tuples in the same job,
+and released (``decoded_blocks``). Each sweep is one ``RDD.mapPartitions``
+job over that cache (``sweep_blocks``): no DataFrame plan, Arrow round trip
+or decode per sweep. Decoding from the persisted blocks, which a task fills
+before its decode starts, keeps one Python worker per task (see session.py
+on worker pools).
 
 Scale envelope (explicit, by design):
 - every sweep moves O(|V|) through the driver twice: the 8|V|-byte rank
@@ -137,10 +138,10 @@ def build_csr_blocks(edges: DataFrame, num_blocks: int,
 
 
 _BLOCK_DTYPES = (np.int64, np.int64, np.int64, np.int32, np.float64)
-# memory, deserialized: the JVM keeps the pickled blocks as byte arrays. A
-# serialized level runs them through Kryo, whose first use in a session
-# cost about 0.3 s of the build.
-_BLOCKS_LEVEL = StorageLevel(False, True, False, True)
+# memory and disk, deserialized: pickled blocks stay JVM byte arrays (Kryo's
+# first use in a session cost ~0.3 s of the build), and blocks that do not
+# fit spill to disk instead of being rebuilt and re-decoded by each sweep.
+_BLOCKS_LEVEL = StorageLevel(True, True, False, True)
 
 
 def _decode(rows):
@@ -150,13 +151,14 @@ def _decode(rows):
 
 
 def decoded_blocks(raw: DataFrame) -> RDD:
-    """Persist the Arrow block build ``raw``, decode it once into a cached
-    RDD of ``(dsts, offsets, usrcs, src_pos, w)`` numpy tuples, release
-    ``raw``; the caller unpersists the result. The count is JVM-side: a
-    Python action would hold a second Python worker per task."""
+    """Build ``raw`` and decode it once into a cached RDD of ``(dsts,
+    offsets, usrcs, src_pos, w)`` numpy tuples in one job, release ``raw``;
+    the caller unpersists the result. ``raw`` is persisted so that a task
+    fills its partition, releasing the ``mapInPandas`` worker, before the
+    decode's worker starts. The count is JVM-side: a Python action would
+    hold a second Python worker per task."""
     raw = raw.persist()
     try:
-        raw.count()
         blocks = raw.rdd.mapPartitions(_decode).persist(_BLOCKS_LEVEL)
         try:
             blocks._jrdd.count()

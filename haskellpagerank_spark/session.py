@@ -38,7 +38,9 @@ is on (the default) and RDD runners do not: the first ``RDD.mapPartitions``
 job started a second daemon and a worker per core. ``get_spark`` sets the
 variable for all runners then, so they share one pool. Within a task, a
 Python RDD stage over an unpersisted ``mapInPandas`` frame holds two
-workers, so decode from a persisted frame, as the CSR SpMV build does.
+workers at once; over a persisted one, the task fills the cached partition
+and releases that worker first, so the CSR SpMV build persists its frame
+and decodes it in the same job.
 
 Small driver-side tables. ``spark.createDataFrame(list)`` turns the rows
 into an RDD of pickled batches that every scan re-reads through Python
