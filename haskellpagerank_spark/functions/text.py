@@ -308,7 +308,6 @@ def tfidf_top_terms(docs: DataFrame, k: int = 3, text_col: str = "text",
         .select("doc_id", F.lower("term").alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist()
     )
     df = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     # every doc passing the non-empty filter has >= 1 token, so the

@@ -6,9 +6,17 @@ One superstep is the Catalyst-native pattern
                GROUP BY dst -> SUM(w * rank)
     new_rank = f(messages)          (per sink_mode, see below)
 
-entirely inside whole-stage codegen: no Python in the hot path. The
-per-partition CSR/SpMV physical variant lives in pagerank_csr.py and plugs
-into the same driver via ``step_fn``.
+entirely inside whole-stage codegen: no Python in the hot path.
+
+Every PageRank tier (this join path, CSR SpMV in pagerank_csr.py, the
+driver-local numpy tier in pagerank_local.py, block Gauss–Seidel in
+pagerank_async.py and per-colour Gauss–Seidel in pagerank_pp.py) hands one
+sweep to ``power_iterate``, which alone owns the iteration policy: resume
+from the last snapshot, the sweep budget (``num_iters`` or ``max_iters``
+plus one verification sweep after a resume at the budget), the
+``tol_norm`` stopping test, the manifest and snapshot writes, the
+return-previous choice, the did-not-converge error and the release of the
+tier's per-run relations on every exit path.
 
 Two semantic modes (SURVEY.md §2.11):
 
@@ -99,9 +107,84 @@ def weighted_edges(g: Graph) -> DataFrame:
     )
 
 
+def power_iterate(name: str, cfg: PageRankConfig, spark, state, step,
+                  load, save, release=(), return_previous: bool = False
+                  ) -> PageRankResult:
+    """The one PageRank iteration loop. A tier supplies its physical sweep:
+
+    - ``state``: the initial iterate (a DataFrame or a numpy vector);
+    - ``step(state) -> (new_state, l1, linf, rows_shuffled, extra)``;
+    - ``load(snapshot_df) -> state`` to resume from an (id, rank) snapshot;
+    - ``save(state) -> DataFrame`` of (id, rank), for snapshots and the
+      result;
+    - ``release``: per-run relations, unpersisted on every exit path;
+    - ``return_previous``: on convergence return the iterate BEFORE the
+      converging sweep (Jacobi, PageRankStep.hs:90); the Gauss–Seidel
+      tiers sweep a single buffer and return the state after it.
+
+    ``cfg.num_iters > 0`` runs that many sweeps in total; 0 runs until the
+    ``tol_norm`` residual is <= ``tol`` (the reference's shared threshold
+    flag, PageRank.hs:49-52), raising after ``max_iters``.
+    """
+    ckpt = CheckpointManager(cfg.checkpoint_dir, cfg.checkpoint_interval)
+    metrics: list[IterationMetrics] = []
+    try:
+        it = 0
+        if cfg.checkpoint_dir:
+            resumed = ckpt.resume(spark, required_columns=("id", "rank"))
+            if resumed is not None:
+                state, it = load(resumed[0]), resumed[1]
+        total_iters = cfg.num_iters if cfg.num_iters > 0 else cfg.max_iters
+        if cfg.num_iters == 0 and it >= total_iters:
+            # resumed at/past max_iters with a converged snapshot on disk: run
+            # one verification sweep instead of skipping the loop and raising
+            total_iters = it + 1
+        while it < total_iters:
+            it += 1
+            t0 = time.monotonic()
+            new, l1, linf, rows_shuffled, extra = step(state)
+            m = IterationMetrics(
+                iteration=it, l1_residual=l1, linf_residual=linf,
+                rows_shuffled=rows_shuffled,
+                wall_s=time.monotonic() - t0, extra=extra,
+            )
+            metrics.append(m)
+            snap = ckpt.should_snapshot(it)
+            ckpt.write(save(new) if snap else None, m, snapshot=snap)
+            prev, state = state, new
+            converged = (linf if cfg.tol_norm == "linf" else l1) <= cfg.tol
+            if cfg.num_iters == 0 and converged:
+                return PageRankResult(
+                    ranks=save(prev if return_previous else state),
+                    iterations=it, metrics=metrics)
+        if cfg.num_iters == 0:
+            raise RuntimeError(
+                f"{name} did not converge within max_iters={cfg.max_iters} "
+                f"(last linf={metrics[-1].linf_residual:.3e})")
+        return PageRankResult(ranks=save(state), iterations=it,
+                              metrics=metrics)
+    finally:
+        for rel in release:
+            rel.unpersist()
+
+
+def rank_residual(new: DataFrame, old: DataFrame) -> tuple[float, float]:
+    """(L1, L∞) of new - old over two (id, rank) relations: one job."""
+    res = (
+        new.alias("n").join(old.alias("o"), "id")
+        .agg(
+            F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("l1"),
+            F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("linf"),
+        )
+        .first()
+    )
+    return float(res["l1"] or 0.0), float(res["linf"] or 0.0)
+
+
 def run_pagerank(g: Graph, cfg: PageRankConfig | None = None,
                  init_ranks: DataFrame | None = None) -> PageRankResult:
-    """Driver loop: one Spark job per superstep + one scalar residual agg.
+    """Join-path PageRank: one Spark job per superstep + one scalar
+    residual agg, iterated by ``power_iterate``.
 
     The per-iteration driver round-trip (residual collect) replaces the
     reference's shared IORef convergence flag (PageRank.hs:49-52).
@@ -145,64 +228,21 @@ def run_pagerank(g: Graph, cfg: PageRankConfig | None = None,
         )
     else:
         ranks = base.select("id", F.lit(float(init)).alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
-    ckpt = CheckpointManager(cfg.checkpoint_dir, cfg.checkpoint_interval)
-    resumed = ckpt.resume(spark, required_columns=("id", "rank")) \
-        if cfg.checkpoint_dir else None
-    start_iter = 0
-    if resumed is not None:
-        ranks, start_iter = resumed[0].repartition(shuffle_p, "id"), resumed[1]
-        ranks = ranks.localCheckpoint(eager=True)
 
-    metrics: list[IterationMetrics] = []
-    total_iters = cfg.num_iters if cfg.num_iters > 0 else cfg.max_iters
-    if cfg.num_iters == 0 and start_iter >= total_iters:
-        # resumed at/past max_iters with a converged snapshot on disk: run
-        # one verification sweep instead of skipping the loop and raising
-        total_iters = start_iter + 1
-    it = start_iter
-    while it < total_iters:
-        it += 1
-        t0 = time.monotonic()
-        new_ranks = _superstep(ew, base, ranks, d, dconst, n_total, cfg)
-        # lazy: the residual aggregation below materializes + caches it,
+    def step(ranks):
+        # lazy: the residual aggregation materializes + caches it,
         # truncating lineage without an extra job
-        new_ranks = new_ranks.localCheckpoint(eager=False)
+        new_ranks = _superstep(ew, base, ranks, d, dconst, n_total, cfg) \
+            .localCheckpoint(eager=False)
+        return (new_ranks, *rank_residual(new_ranks, ranks),
+                n_edges + 2 * n_total, {})
 
-        res = (
-            new_ranks.alias("n")
-            .join(ranks.alias("o"), "id")
-            .agg(
-                F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("l1"),
-                F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("linf"),
-            )
-            .first()
-        )
-        l1, linf = float(res["l1"] or 0.0), float(res["linf"] or 0.0)
-        m = IterationMetrics(
-            iteration=it, l1_residual=l1, linf_residual=linf,
-            rows_shuffled=n_edges + 2 * n_total,
-            wall_s=time.monotonic() - t0,
-        )
-        metrics.append(m)
-        ckpt.write(new_ranks, m)
-
-        converged = (linf if cfg.tol_norm == "linf" else l1) <= cfg.tol
-        if cfg.num_iters == 0 and converged:
-            final = ranks if cfg.return_previous_on_converge else new_ranks
-            ew.unpersist()
-            base.unpersist()
-            return PageRankResult(ranks=final, iterations=it, metrics=metrics)
-        ranks = new_ranks
-
-    ew.unpersist()
-    base.unpersist()
-    if cfg.num_iters == 0:
-        raise RuntimeError(
-            f"pagerank did not converge within max_iters={cfg.max_iters} "
-            f"(last linf={metrics[-1].linf_residual:.3e})"
-        )
-    return PageRankResult(ranks=ranks, iterations=it, metrics=metrics)
+    return power_iterate(
+        "pagerank", cfg, spark, ranks.localCheckpoint(eager=True), step,
+        load=lambda df: df.repartition(shuffle_p, "id")
+        .localCheckpoint(eager=True),
+        save=lambda ranks: ranks, release=(ew, base),
+        return_previous=cfg.return_previous_on_converge)
 
 
 def _superstep(ew: DataFrame, base: DataFrame, ranks: DataFrame,

@@ -21,7 +21,9 @@ scheduling/locking: "pagerankND" hardcodes the parallel threshold to 9e6
 so it always runs the sequential pass (PageRankNonDet.hs:66,85-102);
 "pagerankVC" takes per-vertex MVars (PageRankVC.hs:87-104) and
 "pagerankEC" a global lock plus all neighbor MVars (PageRankEC.hs:96-114)
-— concurrency-control detail over identical math.
+— concurrency-control detail over identical math. ``power_iterate``
+(pagerank.py) runs the loop with ``return_previous=False``: stopping
+rule, resume, snapshots and release.
 
 This operator is the distributed realization of the one REPRODUCIBLE
 member of that schedule family (the BSP idealization): vertices are split
@@ -64,18 +66,14 @@ num_blocks ≳ executor count and let AQE coalesce.
 
 from __future__ import annotations
 
-import time
-from typing import Iterable
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import CheckpointManager, IterationMetrics
 from ..session import skip_unchanged_zip_rereads
 from .graph import Graph, amend_sinks
-from .pagerank import PageRankConfig, PageRankResult, weighted_edges
+from .pagerank import (PageRankConfig, PageRankResult, power_iterate,
+                       weighted_edges)
 
 #: the reference's sequential/parallel crossover (InternalPageRank.hs:26-27)
 MIN_PARALLELIZABLE = 7000
@@ -227,30 +225,7 @@ def run_pagerank_async(g: Graph, cfg: PageRankConfig | None = None,
     out_schema = ("block long, id long, rank double, has_out boolean, "
                   "delta double")
 
-    ranks = base.select(
-        "block", "id", F.lit(float(init)).alias("rank"), "has_out"
-    ).localCheckpoint(eager=True)
-
-    ckpt = CheckpointManager(cfg.checkpoint_dir, cfg.checkpoint_interval)
-    start_sweep = 0
-    resumed = ckpt.resume(spark, required_columns=("id", "rank")) \
-        if cfg.checkpoint_dir else None
-    if resumed is not None:
-        ranks = (
-            base.join(resumed[0].select("id", "rank"), "id")
-            .select("block", "id", "rank", "has_out")
-            .localCheckpoint(eager=True)
-        )
-        start_sweep = resumed[1]
-
-    metrics: list[IterationMetrics] = []
-    total_sweeps = cfg.num_iters if cfg.num_iters > 0 else cfg.max_iters
-    if cfg.num_iters == 0 and start_sweep >= total_sweeps:
-        total_sweeps = start_sweep + 1
-    it = start_sweep
-    while it < total_sweeps:
-        it += 1
-        t0 = time.monotonic()
+    def step(ranks):
         # cross-block gather from sweep-start ranks (Jacobi across chunks)
         msgs = (
             cross
@@ -269,35 +244,23 @@ def run_pagerank_async(g: Graph, cfg: PageRankConfig | None = None,
             .applyInPandas(kernel, schema=out_schema)
             .localCheckpoint(eager=True)
         )
+        # per-vertex movement over the sweep == movement at update time,
+        # i.e. the reference's threshold flag (PageRank.hs:49-52)
         res = swept.agg(F.sum("delta").alias("l1"),
                         F.max("delta").alias("linf")).first()
-        l1, linf = float(res["l1"] or 0.0), float(res["linf"] or 0.0)
-        ranks = swept.select("block", "id", "rank", "has_out")
-        m = IterationMetrics(
-            iteration=it, l1_residual=l1, linf_residual=linf,
-            rows_shuffled=n_cross + 2 * n,
-            wall_s=time.monotonic() - t0,
-            extra={"strategy": "gauss_seidel_block",
-                   "num_blocks": num_blocks,
-                   "internal_edges": n_internal},
-        )
-        metrics.append(m)
-        ckpt.write(ranks.select("id", "rank"), m)
-        # vertexLoop's threshold flag is strict > (PageRank.hs:49-52);
-        # per-vertex movement over the sweep == movement at update time
-        converged = (linf if cfg.tol_norm == "linf" else l1) <= cfg.tol
-        if cfg.num_iters == 0 and converged:
-            break
-    else:
-        if cfg.num_iters == 0:
-            for df in (cross, internal, base):
-                df.unpersist()
-            raise RuntimeError(
-                f"pagerank_async did not converge within max_iters="
-                f"{cfg.max_iters}")
+        return (swept.select("block", "id", "rank", "has_out"),
+                float(res["l1"] or 0.0), float(res["linf"] or 0.0),
+                n_cross + 2 * n,
+                {"strategy": "gauss_seidel_block", "num_blocks": num_blocks,
+                 "internal_edges": n_internal})
 
-    for df in (cross, internal, base):
-        df.unpersist()
     # single buffer: the state AFTER the converging sweep (PageRank.hs:105)
-    return PageRankResult(ranks=ranks.select("id", "rank"),
-                          iterations=it, metrics=metrics)
+    return power_iterate(
+        "pagerank_async", cfg, spark,
+        base.select("block", "id", F.lit(float(init)).alias("rank"),
+                    "has_out").localCheckpoint(eager=True),
+        step,
+        load=lambda df: base.join(df.select("id", "rank"), "id")
+        .select("block", "id", "rank", "has_out").localCheckpoint(eager=True),
+        save=lambda ranks: ranks.select("id", "rank"),
+        release=(cross, internal, base))

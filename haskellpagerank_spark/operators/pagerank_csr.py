@@ -37,8 +37,10 @@ Scale envelope (explicit, by design):
   in executor memory (100 TB / 10k blocks ~ 10 GB raw -> use 10^5 blocks at
   that scale; it is a plain repartition knob).
 
-Numerics match the reference formula exactly (same dconst/damping/sink
-handling as operators/pagerank.py); summation order inside a block is the
+Numerics match the reference formula exactly: the per-sweep blend
+(dconst/damping/sink handling) is the one dense Jacobi step shared with
+pagerank_local.py, and the loop (stopping rule, resume, snapshots) is
+``power_iterate`` in pagerank.py; summation order inside a block is the
 sorted-dst run order, so per-vertex sums agree with the NumPy oracle to
 <= 1e-15 relative (tests assert allclose 1e-12 vs the oracle and vs the
 join path).
@@ -46,7 +48,6 @@ join path).
 
 from __future__ import annotations
 
-import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -55,10 +56,10 @@ from pyspark import RDD, StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import CheckpointManager, IterationMetrics
 from ..session import skip_unchanged_zip_rereads
 from .graph import Graph, amend_sinks
 from .pagerank import PageRankConfig, PageRankResult
+from .pagerank_local import dense_power_iterate
 
 BLOCK_SCHEMA = ("dsts binary, offsets binary, usrcs binary, src_pos binary, "
                 "w binary")
@@ -200,8 +201,10 @@ def run_pagerank_spmv(g: Graph, cfg: PageRankConfig | None = None,
                       hub_threshold: int | None = None,
                       init_ranks: DataFrame | None = None,
                       known_hub_ids=None) -> PageRankResult:
-    """PageRank with CSR-block SpMV supersteps (same semantics/flags as
-    run_pagerank; see PageRankConfig). ``hub_threshold``: in-degree above
+    """PageRank with CSR-block SpMV supersteps: the dense Jacobi sweep of
+    ``dense_power_iterate`` with the link sum gathered by ``sweep_blocks``,
+    iterated by ``power_iterate`` (same semantics/flags as run_pagerank;
+    see PageRankConfig). ``hub_threshold``: in-degree above
     which a dst is salted across blocks (None -> a quarter of the per-block
     edge budget, min 65536; 0 disables the skew probe).
 
@@ -229,8 +232,6 @@ def run_pagerank_spmv(g: Graph, cfg: PageRankConfig | None = None,
     )
     outdeg = np.zeros(n, dtype=np.int64)
     outdeg[deg_pdf["id"].to_numpy(np.int64)] = deg_pdf["deg"].to_numpy(np.int64)
-    has_out = outdeg > 0
-    n_nonsink = int(has_out.sum())
     n_edges = int(outdeg.sum())
 
     # skew probe: salt mega-hub dsts whose in-edges would swamp one block
@@ -250,80 +251,17 @@ def run_pagerank_spmv(g: Graph, cfg: PageRankConfig | None = None,
             hub_ids = indeg_pdf.loc[indeg_pdf["deg"] > hub_threshold,
                                     "id"].to_numpy(np.int64)
 
-    d = cfg.damping
-    init = cfg.init_value if cfg.init_value is not None else 1.0 / n
-    dconst = (1.0 - d) / n_nonsink if n_nonsink else 0.0
-
-    x = np.full(n, float(init))
-    if init_ranks is not None:
-        # warm start (previous converged state after an ingest batch)
-        pdf0 = init_ranks.select("id", "rank").toPandas()
-        x[pdf0["id"].to_numpy(np.int64)] = pdf0["rank"].to_numpy(np.float64)
-    ckpt = CheckpointManager(cfg.checkpoint_dir, cfg.checkpoint_interval)
-    start_iter = 0
-    if cfg.checkpoint_dir:
-        resumed = ckpt.resume(spark, required_columns=("id", "rank"))
-        if resumed is not None:
-            pdf = resumed[0].toPandas()
-            x = np.zeros(n)
-            x[pdf["id"].to_numpy(np.int64)] = pdf["rank"].to_numpy(np.float64)
-            start_iter = resumed[1]
-
-    def to_df(vec: np.ndarray) -> DataFrame:
-        return spark.createDataFrame(
-            pd.DataFrame({"id": np.arange(n, dtype=np.int64), "rank": vec}))
-
-    metrics: list[IterationMetrics] = []
-    total_iters = cfg.num_iters if cfg.num_iters > 0 else cfg.max_iters
-    if cfg.num_iters == 0 and start_iter >= total_iters:
-        # resumed at/past max_iters with a converged snapshot: run one
-        # verification sweep instead of skipping the loop and raising
-        total_iters = start_iter + 1
-    it = start_iter
-    prev = x
     blocks = decoded_blocks(
         build_csr_blocks(work.edges, num_blocks, hub_ids=hub_ids))
-    try:
-        while it < total_iters:
-            it += 1
-            t0 = time.monotonic()
-            # fold the 1/outdeg weighting into the broadcast (blocks store
-            # raw multiplicities): msg_v = sum w_uv * x_u / outdeg_u
-            y = np.divide(x, outdeg, out=np.zeros(n), where=has_out)
-            ids, msgs = sweep_blocks(blocks, y)
-            # bincount sums per-dst partials: exact across salted hub blocks
-            msg = (np.bincount(ids, weights=msgs, minlength=n)
-                   if len(ids) else np.zeros(n))
-            if cfg.sink_mode == "redistribute":
-                dangling = float(x[~has_out].sum())
-                new = (1.0 - d) / n + d * (msg + dangling / n)
-            else:
-                new = dconst + d * msg
-                new[~has_out] = 0.0
-            diff = np.abs(new - x)
-            l1, linf = float(diff.sum()), float(diff.max())
-            m = IterationMetrics(
-                iteration=it, l1_residual=l1, linf_residual=linf,
-                rows_shuffled=0, wall_s=time.monotonic() - t0,
-                extra={"edges_processed": n_edges, "strategy": "spmv"},
-            )
-            metrics.append(m)
-            if cfg.checkpoint_dir:
-                snap = ckpt.should_snapshot(it)
-                ckpt.write(to_df(new) if snap else None, m, snapshot=snap)
-            converged = (linf if cfg.tol_norm == "linf" else l1) <= cfg.tol
-            prev, x = x, new
-            if cfg.num_iters == 0 and converged:
-                final = prev if cfg.return_previous_on_converge else x
-                return PageRankResult(ranks=to_df(final), iterations=it,
-                                      metrics=metrics)
-    finally:
-        blocks.unpersist()
 
-    if cfg.num_iters == 0:
-        raise RuntimeError(
-            f"pagerank_spmv did not converge within max_iters={cfg.max_iters}")
-    return PageRankResult(ranks=to_df(x), iterations=it, metrics=metrics)
+    def link_sum(y: np.ndarray) -> np.ndarray:
+        ids, msgs = sweep_blocks(blocks, y)
+        # bincount sums per-dst partials: exact across salted hub blocks
+        return (np.bincount(ids, weights=msgs, minlength=n)
+                if len(ids) else np.zeros(n))
+
+    return dense_power_iterate(g, cfg, outdeg, link_sum, "spmv", n_edges,
+                               init_ranks, release=(blocks,))
 
 
 # crossover: the O(|V|) per-sweep driver hop of the module docstring's scale

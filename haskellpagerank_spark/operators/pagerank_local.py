@@ -10,12 +10,15 @@ single-node throughput at its own data scale means *choosing not to
 distribute* there.
 
 This module is that choice, behind the same API: collect the edge list
-once (bounded by ``LOCAL_MAX_EDGES``, ~16 bytes/edge), run the identical
+once (bounded by ``LOCAL_MAX_EDGES``, ~16 bytes/edge) and run the identical
 Jacobi semantics (sink reflect/redistribute, duplicate multiplicity,
-isolated-vertex pinning, L1/L∞ stopping, return-previous quirk,
-per-iteration metrics + optional checkpoint manifest) in vectorized numpy.
-``run_pagerank_auto`` (pagerank_csr) dispatches here first; the CSR-SpMV
-and shuffle-join strategies take over beyond driver memory.
+isolated-vertex pinning) in vectorized numpy; ``power_iterate``
+(pagerank.py) owns the loop: stopping rule, return-previous quirk,
+per-iteration metrics and checkpoints. ``dense_power_iterate`` is the
+dense Jacobi sweep shared with the CSR-SpMV tier, which differs only in
+how the link sum is computed. ``run_pagerank_auto`` (pagerank_csr)
+dispatches here first; the CSR-SpMV and shuffle-join strategies take over
+beyond driver memory.
 
 Implemented independently of the test oracle (haskellpagerank_spark.oracle)
 so strategy-parity tests stay meaningful; numerics agree with both to
@@ -24,18 +27,68 @@ so strategy-parity tests stay meaningful; numerics agree with both to
 
 from __future__ import annotations
 
-import time
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from ..plans.checkpoint import CheckpointManager, IterationMetrics
 from .graph import Graph
-from .pagerank import PageRankConfig, PageRankResult
+from .pagerank import PageRankConfig, PageRankResult, power_iterate
 
 # ~16 bytes/edge collected => 80 MB at the cap; far below driver memory
 LOCAL_MAX_EDGES = 5_000_000
+
+
+def dense_power_iterate(g: Graph, cfg: PageRankConfig, outdeg: np.ndarray,
+                        link_sum: Callable[[np.ndarray], np.ndarray],
+                        strategy: str, n_edges: int,
+                        init_ranks: DataFrame | None = None,
+                        release=()) -> PageRankResult:
+    """Jacobi PageRank over a driver-resident rank vector. ``outdeg`` is
+    the out-degree of every vertex (amended graph under reflect);
+    ``link_sum(y)`` returns, per vertex v, sum over in-edges u -> v (with
+    multiplicity) of y[u], where y = x / outdeg."""
+    spark = g.spark
+    n = len(outdeg)
+    has_out = outdeg > 0
+    n_nonsink = int(has_out.sum())
+    d = cfg.damping
+    init = cfg.init_value if cfg.init_value is not None else 1.0 / n
+    dconst = (1.0 - d) / n_nonsink if n_nonsink else 0.0
+
+    def to_vec(df: DataFrame, fill: float) -> np.ndarray:
+        pdf = df.select("id", "rank").toPandas()
+        x = np.full(n, fill)
+        x[pdf["id"].to_numpy(np.int64)] = pdf["rank"].to_numpy(np.float64)
+        return x
+
+    def to_df(vec: np.ndarray) -> DataFrame:
+        return spark.createDataFrame(
+            pd.DataFrame({"id": np.arange(n, dtype=np.int64), "rank": vec}))
+
+    def step(x: np.ndarray):
+        # fold the 1/outdeg weighting into the gathered vector
+        y = np.divide(x, outdeg, out=np.zeros(n), where=has_out)
+        msg = link_sum(y)
+        if cfg.sink_mode == "redistribute":
+            dangling = float(x[~has_out].sum())
+            new = (1.0 - d) / n + d * (msg + dangling / n)
+        else:
+            new = dconst + d * msg
+            new[~has_out] = 0.0
+        diff = np.abs(new - x)
+        return (new, float(diff.sum()), float(diff.max()), 0,
+                {"edges_processed": n_edges, "strategy": strategy})
+
+    # warm start: the previous converged state after an ingest batch
+    x = (np.full(n, float(init)) if init_ranks is None
+         else to_vec(init_ranks, float(init)))
+    return power_iterate(
+        f"pagerank_{strategy}", cfg, spark, x, step,
+        load=lambda df: to_vec(df, 0.0), save=to_df, release=release,
+        return_previous=cfg.return_previous_on_converge)
 
 
 def run_pagerank_local(g: Graph, cfg: PageRankConfig | None = None,
@@ -44,10 +97,8 @@ def run_pagerank_local(g: Graph, cfg: PageRankConfig | None = None,
     """PageRank entirely on the driver (one collect, zero Spark jobs per
     sweep). Same semantics/flags as run_pagerank/run_pagerank_spmv."""
     cfg = cfg or PageRankConfig()
-    spark = g.spark
     n = g.num_vertices
     if n == 0:
-        from pyspark.sql import functions as F
         return PageRankResult(ranks=g.vertices().select(
             "id", F.lit(0.0).alias("rank")), iterations=0)
 
@@ -64,72 +115,7 @@ def run_pagerank_local(g: Graph, cfg: PageRankConfig | None = None,
         src = np.concatenate([src, add_src])
         dst = np.concatenate([dst, add_dst])
 
-    outdeg = np.bincount(src, minlength=n)
-    has_out = outdeg > 0
-    n_nonsink = int(has_out.sum())
-    n_edges = len(src)
-
-    d = cfg.damping
-    init = cfg.init_value if cfg.init_value is not None else 1.0 / n
-    dconst = (1.0 - d) / n_nonsink if n_nonsink else 0.0
-
-    x = np.full(n, float(init))
-    if init_ranks is not None:
-        p0 = init_ranks.select("id", "rank").toPandas()
-        x[p0["id"].to_numpy(np.int64)] = p0["rank"].to_numpy(np.float64)
-
-    ckpt = CheckpointManager(cfg.checkpoint_dir, cfg.checkpoint_interval)
-    start_iter = 0
-    if cfg.checkpoint_dir:
-        resumed = ckpt.resume(spark, required_columns=("id", "rank"))
-        if resumed is not None:
-            rp = resumed[0].toPandas()
-            x = np.zeros(n)
-            x[rp["id"].to_numpy(np.int64)] = rp["rank"].to_numpy(np.float64)
-            start_iter = resumed[1]
-
-    def to_df(vec: np.ndarray) -> DataFrame:
-        return spark.createDataFrame(
-            pd.DataFrame({"id": np.arange(n, dtype=np.int64), "rank": vec}))
-
-    metrics: list[IterationMetrics] = []
-    total_iters = cfg.num_iters if cfg.num_iters > 0 else cfg.max_iters
-    if cfg.num_iters == 0 and start_iter >= total_iters:
-        # resumed at/past max_iters with a converged snapshot: run one
-        # verification sweep instead of skipping the loop and raising
-        total_iters = start_iter + 1
-    it = start_iter
-    prev = x
-    while it < total_iters:
-        it += 1
-        t0 = time.monotonic()
-        y = np.divide(x, outdeg, out=np.zeros(n), where=has_out)
-        msg = np.bincount(dst, weights=y[src], minlength=n)
-        if cfg.sink_mode == "redistribute":
-            dangling = float(x[~has_out].sum())
-            new = (1.0 - d) / n + d * (msg + dangling / n)
-        else:
-            new = dconst + d * msg
-            new[~has_out] = 0.0
-        diff = np.abs(new - x)
-        l1, linf = float(diff.sum()), float(diff.max())
-        m = IterationMetrics(
-            iteration=it, l1_residual=l1, linf_residual=linf,
-            rows_shuffled=0, wall_s=time.monotonic() - t0,
-            extra={"edges_processed": n_edges, "strategy": "local"},
-        )
-        metrics.append(m)
-        if cfg.checkpoint_dir:
-            snap = ckpt.should_snapshot(it)
-            ckpt.write(to_df(new) if snap else None, m, snapshot=snap)
-        converged = (linf if cfg.tol_norm == "linf" else l1) <= cfg.tol
-        prev, x = x, new
-        if cfg.num_iters == 0 and converged:
-            final = prev if cfg.return_previous_on_converge else x
-            return PageRankResult(ranks=to_df(final), iterations=it,
-                                  metrics=metrics)
-
-    if cfg.num_iters == 0:
-        raise RuntimeError(
-            f"pagerank_local did not converge within max_iters={cfg.max_iters}")
-    return PageRankResult(ranks=to_df(x), iterations=it, metrics=metrics)
+    return dense_power_iterate(
+        g, cfg, np.bincount(src, minlength=n),
+        lambda y: np.bincount(dst, weights=y[src], minlength=n),
+        "local", len(src), init_ranks)

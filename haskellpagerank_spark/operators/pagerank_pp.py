@@ -11,6 +11,8 @@ with dConst = (1-d)/n_nonsink over the amended graph (:268-294), vertices
 with no out-edges pinned to 0 (:88), convergence when no vertex moved by
 more than ``threshold`` during a full sweep, and the buffer AFTER the final
 sweep returned (single buffer, unlike Jacobi's previous-iterate quirk).
+``power_iterate`` (pagerank.py) runs the loop with ``return_previous=False``:
+stopping rule, resume, snapshots and release.
 
 Why the coloring makes this distributable: same-colored vertices are
 non-adjacent, so their in-neighborhoods never include each other — updating
@@ -36,15 +38,13 @@ lazily and the sweep-end residual aggregation materializes the chain.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import CheckpointManager, IterationMetrics
 from .coloring import greedy_coloring
 from .graph import Graph, amend_sinks, out_degrees
-from .pagerank import PageRankConfig, PageRankResult, weighted_edges
+from .pagerank import (PageRankConfig, PageRankResult, power_iterate,
+                       rank_residual, weighted_edges)
 
 
 def run_pagerank_pp(g: Graph, cfg: PageRankConfig | None = None,
@@ -109,35 +109,7 @@ def run_pagerank_pp(g: Graph, cfg: PageRankConfig | None = None,
     dconst = (1.0 - d) / n_nonsink if n_nonsink else 0.0
     init = cfg.init_value if cfg.init_value is not None else 1.0 / n
 
-    ranks = base.select(
-        "id", "color", "has_out",
-        F.when(F.col("has_out"), F.lit(float(init)))
-        .otherwise(F.lit(0.0)).alias("rank"),
-    ).localCheckpoint(eager=True)
-
-    # resumable: snapshots carry (id, rank); color/has_out are rebuilt from
-    # the (deterministic) coloring + degree tables on resume
-    ckpt = CheckpointManager(cfg.checkpoint_dir, cfg.checkpoint_interval)
-    start_sweep = 0
-    resumed = ckpt.resume(spark, required_columns=("id", "rank")) \
-        if cfg.checkpoint_dir else None
-    if resumed is not None:
-        ranks = (
-            base.join(resumed[0].select("id", "rank"), "id")
-            .select("id", "color", "has_out", "rank")
-            .repartition(shuffle_p, "id")
-            .localCheckpoint(eager=True)
-        )
-        start_sweep = resumed[1]
-
-    metrics: list[IterationMetrics] = []
-    total_sweeps = cfg.num_iters if cfg.num_iters > 0 else cfg.max_iters
-    if cfg.num_iters == 0 and start_sweep >= total_sweeps:
-        total_sweeps = start_sweep + 1  # one verification sweep, not a raise
-    it = start_sweep
-    while it < total_sweeps:
-        it += 1
-        t0 = time.monotonic()
+    def step(ranks):
         sweep_start = ranks
         for c in color_list:
             msgs = (
@@ -161,36 +133,23 @@ def run_pagerank_pp(g: Graph, cfg: PageRankConfig | None = None,
         # per-vertex movement over the FULL sweep == movement at its own
         # update time (each vertex updates exactly once per sweep), i.e.
         # exactly the reference's isAboveThreshold flag
-        res = (
-            ranks.alias("n").join(sweep_start.alias("o"), "id")
-            .agg(F.sum(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("l1"),
-                 F.max(F.abs(F.col("n.rank") - F.col("o.rank"))).alias("linf"))
-            .first()
-        )
-        l1, linf = float(res["l1"] or 0.0), float(res["linf"] or 0.0)
-        m = IterationMetrics(
-            iteration=it, l1_residual=l1, linf_residual=linf,
-            rows_shuffled=n_edges + len(color_list) * n,
-            wall_s=time.monotonic() - t0,
-            extra={"strategy": "gauss_seidel_pp",
-                   "colors": len(color_list)},
-        )
-        metrics.append(m)
-        ckpt.write(ranks.select("id", "rank"), m)
-        converged = (linf if cfg.tol_norm == "linf" else l1) <= cfg.tol
-        if cfg.num_iters == 0 and converged:
-            break
-    else:
-        if cfg.num_iters == 0:
-            for df in (ewc, base, colors, *ew_by_color.values()):
-                df.unpersist()
-            raise RuntimeError(
-                f"pagerank_pp did not converge within max_iters="
-                f"{cfg.max_iters}")
+        return (ranks, *rank_residual(ranks, sweep_start),
+                n_edges + len(color_list) * n,
+                {"strategy": "gauss_seidel_pp", "colors": len(color_list)})
 
-    for df in (ewc, base, colors, *ew_by_color.values()):
-        df.unpersist()
-    # single buffer: the state AFTER the converging sweep (the reference's
-    # GS loop has no previous-iterate quirk)
-    return PageRankResult(ranks=ranks.select("id", "rank"),
-                          iterations=it, metrics=metrics)
+    # snapshots carry (id, rank); color/has_out are rebuilt from the
+    # (deterministic) coloring + degree tables on resume. Single buffer:
+    # the state AFTER the converging sweep (no previous-iterate quirk).
+    return power_iterate(
+        "pagerank_pp", cfg, spark,
+        base.select(
+            "id", "color", "has_out",
+            F.when(F.col("has_out"), F.lit(float(init)))
+            .otherwise(F.lit(0.0)).alias("rank"),
+        ).localCheckpoint(eager=True),
+        step,
+        load=lambda df: base.join(df.select("id", "rank"), "id")
+        .select("id", "color", "has_out", "rank")
+        .repartition(shuffle_p, "id").localCheckpoint(eager=True),
+        save=lambda ranks: ranks.select("id", "rank"),
+        release=(ewc, base, colors, *ew_by_color.values()))

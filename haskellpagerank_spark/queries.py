@@ -438,11 +438,6 @@ def _q_pagerank_nation_30(spark, sf_dir):
     return res.ranks.select("id", F.round("rank", 8).alias("rank"))
 
 
-def _q_cc_nation(spark, sf_dir):
-    g = nation_trade_graph(spark, sf_dir)
-    return connected_components(g).df
-
-
 def _q_cc_cs(spark, sf_dir):
     g = cs_graph(spark, sf_dir)
     return connected_components(g).df
@@ -452,7 +447,7 @@ def _q_cc_incremental_nation(spark, sf_dir):
     """Incremental CC through the driver gate: converge on a deterministic
     ~2/3 edge subset, then warm-start over the full graph from those
     labels. The fixpoint is schedule-independent, so the oracle is the
-    same recursive-CTE CC as cc_nation — hash-equality proves the warm
+    same recursive-CTE CC (CC_NATION_SQL) — hash-equality proves the warm
     path lands on the exact full-graph components."""
     from .operators.components import connected_components_incremental
     from .operators.graph import from_edge_df
@@ -462,11 +457,6 @@ def _q_cc_incremental_nation(spark, sf_dir):
         num_vertices=g.num_vertices)
     prev = connected_components(base)
     return connected_components_incremental(g, prev.df).df
-
-
-def _q_lp_nation_5(spark, sf_dir):
-    g = nation_trade_graph(spark, sf_dir)
-    return label_propagation(g, num_iters=5).df
 
 
 def _q_lp_cs_3(spark, sf_dir):
@@ -1328,30 +1318,6 @@ def _q_benchparse_normalize(spark, sf_dir):
         F.round("normalized", 6).alias("normalized"))
 
 
-def _q_catalog_events_snapshot(spark, sf_dir):
-    """Iceberg-seam fidelity gate (sources/catalog.py): commit the events
-    table into a versioned catalog table as two append snapshots
-    (hive-partitioned by event_type), resolve the CURRENT snapshot through
-    the manifest, and aggregate what comes back. The DuckDB twin aggregates
-    the raw parquet directly — any file the commit or manifest-driven read
-    loses, duplicates, or corrupts breaks the hash."""
-    import shutil
-    from .sources.catalog import Table
-    root = f"{SQ.HANDOFF_DIR}/catalog_events"
-    shutil.rmtree(root, ignore_errors=True)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    t = Table(root)
-    t.commit(ev.where(F.col("event_id") % 2 == 0),
-             partition_by=["event_type"])
-    t.commit(ev.where(F.col("event_id") % 2 == 1),
-             partition_by=["event_type"])
-    return t.read(spark).groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 6).alias("total_value"),
-        F.min("event_id").alias("min_event"),
-        F.max("event_id").alias("max_event"))
-
-
 def _q_catalog_events_evolved(spark, sf_dir):
     """Iceberg-seam v2 gate: schema evolution + merge-on-read deletes +
     sequence-number semantics, end-to-end (sources/catalog.py).
@@ -1953,7 +1919,6 @@ _SQL: dict[str, str] = {
     "pagerank_superstep_cs": pagerank_sql(CS_EDGES_SQL, CS_VERTS_SQL, 1),
     "pagerank_cs_5": pagerank_sql(CS_EDGES_SQL, CS_VERTS_SQL, 5),
     "pagerank_nation_30": pagerank_sql(NATION_EDGES_SQL, NATION_VERTS_SQL, 30),
-    "cc_nation": CC_NATION_SQL,
     # incremental CC converges to the same schedule-independent fixpoint,
     # so its twin is the full-graph CC
     "cc_incremental_nation": CC_NATION_SQL,
@@ -1976,12 +1941,9 @@ _SQL: dict[str, str] = {
         SELECT DISTINCT src, dst FROM
         (SELECT src, dst FROM e0 UNION ALL SELECT dst, src FROM e0)
     """,
-    "lp_nation_5": lp_sql(NATION_EDGES_SQL, NATION_VERTS_SQL, 5),
     "lp_cs_3": lp_sql(CS_EDGES_SQL, CS_VERTS_SQL, 3),
     "triangle_count_nation": TRIANGLES_NATION_SQL,
     "triangles_sampled_nation": TRIANGLES_SAMPLED_NATION_SQL,
-    # the incremental count totals to the same full-graph value
-    "triangles_incremental_nation": TRIANGLES_NATION_SQL,
     "token_stats": f"""
         SELECT doc_id,
                CASE WHEN length(trim(text)) = 0 THEN 0
@@ -2179,7 +2141,6 @@ _SQL: dict[str, str] = {
                COUNT(*) AS n_events, ROUND(SUM(value), 6) AS total_value
         FROM events GROUP BY 1, 2
     """,
-    "pagerank_spmv_cs_5": pagerank_sql(CS_EDGES_SQL, CS_VERTS_SQL, 5),
     "pagerank_reflect_nation_5": pagerank_reflect_sql(
         NATION_EDGES_SQL, NATION_VERTS_SQL, 5),
     "pagerank_gs_nation_5": pagerank_gs_sql(
@@ -2192,9 +2153,6 @@ _SQL: dict[str, str] = {
         + ") ORDER BY rank DESC, id ASC LIMIT 10"
     ),
     "cc_cs": cc_minlabel_sql(CS_EDGES_SQL, CS_VERTS_SQL, 20),
-    "cc_spmv_cs": cc_minlabel_sql(CS_EDGES_SQL, CS_VERTS_SQL, 20),
-    "cc_auto_cs": cc_minlabel_sql(CS_EDGES_SQL, CS_VERTS_SQL, 20),
-    "lp_auto_cs_3": lp_sql(CS_EDGES_SQL, CS_VERTS_SQL, 3),
     # coloring fixed points, unrolled: 26 rounds covers the longest
     # id-increasing (resp. priority-decreasing) path on the 25-vertex
     # nation graph; extra rounds are no-ops at the fixed point
@@ -2305,8 +2263,6 @@ _SQL: dict[str, str] = {
         FROM e JOIN s a ON e.src = a.id JOIN s b ON e.dst = b.id
         WHERE a.scc <> b.scc GROUP BY 1, 2
     """,
-    # the auto tier converges to the same schedule-independent labels
-    "scc_auto_nation": SQ.scc_sql(NATION_EDGES_SQL, NATION_VERTS_SQL),
     "bowtie_nation": SQ.bowtie_sql(NATION_EDGES_SQL, NATION_VERTS_SQL),
     "sssp_nation": SQ.sssp_sql(NATION_EDGES_SQL, NATION_VERTS_SQL, [0],
                                rounds=26),
@@ -2442,12 +2398,6 @@ _SQL: dict[str, str] = {
                ROUND(CASE WHEN nrm = 0 THEN 0.0 ELSE mean / nrm END, 6)
                    AS normalized
         FROM s
-    """,
-    "catalog_events_snapshot": """
-        SELECT event_type, COUNT(*) AS n_events,
-               ROUND(SUM(value), 6) AS total_value,
-               MIN(event_id) AS min_event, MAX(event_id) AS max_event
-        FROM events GROUP BY 1
     """,
     "catalog_events_evolved": """
         WITH cur AS (

@@ -6,14 +6,19 @@ in both sink modes, both stopping rules, and under checkpoint/resume.
 
 import numpy as np
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from haskellpagerank_spark import oracle as O
 from haskellpagerank_spark.fixtures import FIXTURE_EDGES
 from haskellpagerank_spark.operators.graph import from_pairs
 from haskellpagerank_spark.operators.pagerank import (
     PageRankConfig, reference_config, run_pagerank)
+from haskellpagerank_spark.operators.pagerank_async import run_pagerank_async
 from haskellpagerank_spark.operators.pagerank_csr import (
     run_pagerank_auto, run_pagerank_spmv)
+from haskellpagerank_spark.operators.pagerank_local import run_pagerank_local
+from haskellpagerank_spark.operators.pagerank_pp import run_pagerank_pp
+from haskellpagerank_spark.plans.checkpoint import CheckpointManager
 
 
 def _ranks(res, n):
@@ -70,30 +75,68 @@ def test_spmv_checkpoint_resume(spark, tmp_path):
         _ranks(resumed, g.num_vertices), _ranks(plain, g.num_vertices))
 
 
-def test_spmv_leaves_no_cached_blocks(spark, tmp_path):
-    """Every exit path releases the decoded blocks: a converged run, a
-    fixed-sweep run, a checkpoint resume and the did-not-converge error all
-    leave the session's persisted RDDs as they found them."""
-    jsc = spark.sparkContext._jsc
+TIERS = {"join": run_pagerank, "spmv": run_pagerank_spmv,
+         "local": run_pagerank_local, "async": run_pagerank_async,
+         "pp": run_pagerank_pp}
 
-    def persisted():
+
+@pytest.mark.parametrize("tier", list(TIERS))
+def test_releases_relations_on_every_exit(spark, tmp_path, monkeypatch,
+                                          tier):
+    """Every exit path of every PageRank tier releases what the tier
+    cached: a fixed-sweep run, a checkpoint resume run to convergence, the
+    did-not-converge error and a run whose second sweep raises. Every
+    frame the tier persisted ends uncached; for SpMV the session's
+    persisted RDDs also gain no id (the DataFrame tiers' per-sweep
+    localCheckpoint RDDs stay registered until the JVM collects them, so
+    their ids are not compared)."""
+    run = TIERS[tier]
+    jsc = spark.sparkContext._jsc
+    persisted = []
+    persist = ClassicDataFrame.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "persist", spy)
+
+    def rdd_ids():
         return set(jsc.getPersistentRDDs().keys())
+
+    before = rdd_ids()
+
+    def released():
+        assert not [df for df in persisted if df.is_cached]
+        if tier == "spmv":
+            assert rdd_ids() <= before
 
     g = from_pairs(spark, FIXTURE_EDGES["hub"] + FIXTURE_EDGES["doubleSquare"])
     ck = str(tmp_path / "ck")
-    before = persisted()
-    run_pagerank_spmv(g, PageRankConfig(tol=1e-10))
-    assert persisted() <= before
-    run_pagerank_spmv(g, PageRankConfig(num_iters=3, checkpoint_dir=ck,
-                                        checkpoint_interval=1))
-    assert persisted() <= before
-    resumed = run_pagerank_spmv(g, PageRankConfig(
-        num_iters=5, checkpoint_dir=ck, checkpoint_interval=1))
-    assert resumed.metrics[0].iteration == 4
-    assert persisted() <= before
+    run(g, reference_config(num_iters=2, checkpoint_dir=ck,
+                            checkpoint_interval=1))
+    released()
+    resumed = run(g, reference_config(checkpoint_dir=ck,
+                                      checkpoint_interval=1))
+    assert resumed.metrics[0].iteration == 3
+    released()
     with pytest.raises(RuntimeError, match="did not converge"):
-        run_pagerank_spmv(g, PageRankConfig(tol=0.0, max_iters=2))
-    assert persisted() <= before
+        run(g, reference_config(tol=0.0, max_iters=1))
+    released()
+
+    write = CheckpointManager.write
+
+    def failing_write(self, state, metrics, snapshot=None):
+        if metrics.iteration == 2:
+            raise OSError("injected snapshot failure")
+        return write(self, state, metrics, snapshot)
+
+    monkeypatch.setattr(CheckpointManager, "write", failing_write)
+    with pytest.raises(OSError, match="injected"):
+        run(g, reference_config(num_iters=2,
+                                checkpoint_dir=str(tmp_path / "ck_fail"),
+                                checkpoint_interval=1))
+    released()
 
 
 def test_auto_dispatch_tiers(spark):
@@ -151,8 +194,6 @@ def test_all_strategies_agree_on_random_graphs(spark, seed, sink_mode):
     include sinks, duplicate edges, and a hub — topologies the fixtures
     only probe one at a time. Redistribute mode must also conserve mass."""
     import random
-    from haskellpagerank_spark.operators.pagerank_local import (
-        run_pagerank_local)
     rng = random.Random(seed)
     n = rng.randint(15, 30)
     pairs = [(u, v) for u in range(n) for v in range(n)

@@ -11,9 +11,11 @@ from haskellpagerank_spark.fixtures import FIXTURE_EDGES
 from haskellpagerank_spark.operators.graph import from_pairs
 from haskellpagerank_spark.operators.pagerank import (
     PageRankConfig, reference_config, run_pagerank)
+from haskellpagerank_spark.operators.pagerank_async import run_pagerank_async
 from haskellpagerank_spark.operators.pagerank_csr import (
     run_pagerank_auto, run_pagerank_spmv)
 from haskellpagerank_spark.operators.pagerank_local import run_pagerank_local
+from haskellpagerank_spark.operators.pagerank_pp import run_pagerank_pp
 
 
 def _ranks(res, n):
@@ -70,16 +72,22 @@ def test_local_checkpoint_resume(spark, tmp_path):
 
 
 @pytest.mark.parametrize("runner", [run_pagerank_local, run_pagerank_spmv,
-                                    run_pagerank])
+                                    run_pagerank, run_pagerank_async,
+                                    run_pagerank_pp])
 def test_resume_at_converged_snapshot_returns_state(spark, tmp_path, runner):
     """Resuming a CONVERGED snapshot whose iteration already equals
     max_iters must run one verification sweep and return the state — not
-    skip the loop and raise 'did not converge'."""
+    skip the loop and raise 'did not converge'. The Gauss–Seidel tiers
+    reject redistribute, so they run reflect (with the reference damping,
+    which converges in fewer of their costlier sweeps)."""
     g = from_pairs(spark, FIXTURE_EDGES["doubleSquare"])
     ck = str(tmp_path / f"ck_{runner.__name__}")
-    base = dict(damping=0.85, tol=1e-8, tol_norm="l1",
-                sink_mode="redistribute", checkpoint_dir=ck,
-                checkpoint_interval=1)
+    if runner in (run_pagerank_async, run_pagerank_pp):
+        mode = dict(damping=0.15, sink_mode="reflect")
+    else:
+        mode = dict(damping=0.85, sink_mode="redistribute")
+    base = dict(tol=1e-8, tol_norm="l1", checkpoint_dir=ck,
+                checkpoint_interval=1, **mode)
     first = runner(g, PageRankConfig(num_iters=0, max_iters=100, **base))
     # resume with max_iters == the converged iteration count
     second = runner(g, PageRankConfig(
@@ -88,3 +96,19 @@ def test_resume_at_converged_snapshot_returns_state(spark, tmp_path, runner):
     # states sit within tol of the fixpoint
     np.testing.assert_allclose(_ranks(second, g.num_vertices),
                                _ranks(first, g.num_vertices), atol=1e-7)
+
+
+@pytest.mark.parametrize("runner", [run_pagerank_async, run_pagerank_pp])
+def test_gauss_seidel_tiers_ignore_return_previous(spark, runner):
+    """The Gauss–Seidel tiers sweep one buffer and return the state after
+    the converging sweep whatever ``return_previous_on_converge`` says:
+    the same ranks and sweep count as with False."""
+    g = from_pairs(spark, FIXTURE_EDGES["doubleSquare"])
+    prev = runner(g, reference_config())  # return_previous_on_converge=True
+    last = runner(g, reference_config(return_previous_on_converge=False))
+    assert prev.iterations == last.iterations
+    # the converging sweep moved the state by far more than the 1e-12
+    # tolerance below, so returning the previous iterate would show
+    assert prev.metrics[-1].linf_residual > 1e-9
+    n = g.num_vertices
+    np.testing.assert_allclose(_ranks(prev, n), _ranks(last, n), atol=1e-12)
