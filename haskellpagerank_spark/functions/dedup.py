@@ -319,7 +319,7 @@ def neardup_clusters(docs: DataFrame, text_col: str = "text",
     verification) -> undirected pair graph over the *participants only*
     (docs with no near-dup never enter the fixpoint) -> min-label connected
     components via the engine's semi-naive frontier loop
-    (operators.components._cc_frontier_loop) -> canonical = min doc id in
+    (operators.components._min_label) -> canonical = min doc id in
     the cluster (deterministic; swap in a quality-ranked choice by joining
     quality scores before the arg-min if desired).
 
@@ -334,8 +334,7 @@ def neardup_clusters(docs: DataFrame, text_col: str = "text",
     the loop converges in a handful of sweeps; each sweep shuffles only the
     changed-label frontier.
     """
-    from ..operators.components import _cc_frontier_loop
-    from ..plans.checkpoint import CheckpointManager
+    from ..operators.components import _min_label
 
     pairs = minhash_lsh_pairs(docs, text_col, id_col, n, num_hashes, bands,
                               threshold, hash_mode).select("id_a", "id_b")
@@ -348,8 +347,7 @@ def neardup_clusters(docs: DataFrame, text_col: str = "text",
     )
     labels = (edges.select(F.col("src").alias("id")).distinct()
               .withColumn("component", F.col("id")))
-    res = _cc_frontier_loop(edges, labels, labels, max_iters, 0,
-                            CheckpointManager(None))
+    res = _min_label(edges, labels, labels, max_iters)
     if res.metrics and res.metrics[-1].extra.get("changed", 0) != 0:
         raise RuntimeError(
             f"neardup_clusters min-label fixpoint did not converge within "

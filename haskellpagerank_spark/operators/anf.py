@@ -32,9 +32,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..plans.fixpoint import IterativeResult
 from ..session import local_df
 from .graph import Graph
-from .structure import StructureResult
 
 # FM bias correction (Flajolet-Martin 1985, phi)
 FM_PHI = 0.77351
@@ -115,7 +115,7 @@ def _sweep(e: DataFrame, state: DataFrame) -> DataFrame:
 
 
 def anf(g: Graph, radius: int, n_sketches: int = 8,
-        seed: int = 42) -> StructureResult:
+        seed: int = 42) -> IterativeResult:
     """Run ``radius`` union sweeps; returns (id, ball_est) — the estimated
     number of vertices reachable from id within ``radius`` hops (including
     itself). metrics[t].extra["nf_sum"] is the neighborhood function N(t+1)
@@ -143,7 +143,7 @@ def anf(g: Graph, radius: int, n_sketches: int = 8,
             wall_s=time.monotonic() - t0,
             extra={"nf_sum": nf_sum}))
     e.unpersist()
-    return StructureResult(df=_estimate(state), iterations=radius,
+    return IterativeResult(df=_estimate(state), iterations=radius,
                            metrics=metrics)
 
 

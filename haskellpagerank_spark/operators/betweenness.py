@@ -25,17 +25,16 @@ from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..plans.fixpoint import IterativeResult
 from ..session import local_df
 from .graph import Graph
-from .structure import StructureResult
 
 
 def betweenness(g: Graph, landmarks: list[int],
-                max_depth: int = 200) -> StructureResult:
+                max_depth: int = 200) -> IterativeResult:
     """(id, bc) over the dense vertex space (0.0 for vertices on no
     shortest path). Directed, unweighted, endpoints excluded — textbook
     Brandes semantics, exact for landmarks = V."""
@@ -128,7 +127,7 @@ def betweenness(g: Graph, landmarks: list[int],
         .select("id", F.coalesce("bc", F.lit(0.0)).alias("bc"))
     )
     e.unpersist()
-    return StructureResult(df=out, iterations=depth, metrics=metrics)
+    return IterativeResult(df=out, iterations=depth, metrics=metrics)
 
 
 def sampled_pivots(n: int, keep_num: int = 2, keep_den: int = 5) -> list[int]:
@@ -141,7 +140,7 @@ def sampled_pivots(n: int, keep_num: int = 2, keep_den: int = 5) -> list[int]:
 
 
 def betweenness_sampled(g: Graph, keep_num: int = 2, keep_den: int = 5,
-                        max_depth: int = 200) -> StructureResult:
+                        max_depth: int = 200) -> IterativeResult:
     """Brandes–Pich estimated betweenness (Brandes & Pich, "Centrality
     estimation in large networks", IJBC 2007): run the exact two-pass
     kernel from a DETERMINISTIC pivot sample (p = keep_num/keep_den of the
@@ -161,7 +160,7 @@ def betweenness_sampled(g: Graph, keep_num: int = 2, keep_den: int = 5,
         "id",
         (F.col("bc") * F.lit(float(n)) / F.lit(float(len(pivots))))
         .alias("bc"))
-    return StructureResult(df=scaled, iterations=res.iterations,
+    return IterativeResult(df=scaled, iterations=res.iterations,
                            metrics=res.metrics)
 
 

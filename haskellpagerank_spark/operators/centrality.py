@@ -30,27 +30,20 @@ Scale notes per operator:
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..plans.fixpoint import IterativeResult
 from ..session import local_df
 from .graph import Graph, invert, out_degrees
 from .pagerank import weighted_edges
 
 
-@dataclass
-class CentralityResult:
-    df: DataFrame
-    iterations: int
-    metrics: list[IterationMetrics] = field(default_factory=list)
-
-
 # ------------------------------------------------------------------- HITS
 
-def hits(g: Graph, num_iters: int = 10) -> CentralityResult:
+def hits(g: Graph, num_iters: int = 10) -> IterativeResult:
     """Kleinberg's HITS over the *simple* (deduped) directed edge set.
 
     Per iteration: authority = column-normalized A^T @ hub, then
@@ -91,7 +84,7 @@ def hits(g: Graph, num_iters: int = 10) -> CentralityResult:
     )
     edges.unpersist()
     verts.unpersist()
-    return CentralityResult(df=out, iterations=num_iters, metrics=metrics)
+    return IterativeResult(df=out, iterations=num_iters, metrics=metrics)
 
 
 def _gather_normalize(edges: DataFrame, verts: DataFrame, scores: DataFrame,
@@ -121,7 +114,7 @@ def _gather_normalize(edges: DataFrame, verts: DataFrame, scores: DataFrame,
 
 def personalized_pagerank(g: Graph, seeds: list[int],
                           damping: float = 0.85,
-                          num_iters: int = 20) -> CentralityResult:
+                          num_iters: int = 20) -> IterativeResult:
     """Seeded (topic-sensitive) PageRank: the teleport distribution is
     uniform over ``seeds`` instead of uniform over V, and dangling mass
     returns to the seeds. Duplicate edges weight contributions exactly as
@@ -187,14 +180,14 @@ def personalized_pagerank(g: Graph, seeds: list[int],
             wall_s=time.monotonic() - t0))
     ew.unpersist()
     base.unpersist()
-    return CentralityResult(df=ranks, iterations=num_iters, metrics=metrics)
+    return IterativeResult(df=ranks, iterations=num_iters, metrics=metrics)
 
 
 # --------------------------------------------------------- BFS distances
 
 def bfs_distances(g: Graph, sources: list[int],
                   directed: bool = True,
-                  max_depth: int = 200) -> CentralityResult:
+                  max_depth: int = 200) -> IterativeResult:
     """Multi-source BFS hop distances (semi-naive frontier expansion).
 
     Returns (id, dist) for REACHED vertices only — dist = minimum hop count
@@ -213,7 +206,7 @@ def bfs_distances(g: Graph, sources: list[int],
 
 def bfs_distances_from(g: Graph, seeds: DataFrame,
                        directed: bool = True,
-                       max_depth: int = 200) -> CentralityResult:
+                       max_depth: int = 200) -> IterativeResult:
     """`bfs_distances` seeded from a DataFrame (id) instead of a driver-side
     list — the scale path: a seed set of any size (e.g. a whole SCC in
     bowtie) stays distributed, never a collect or an ``isin`` plan literal.
@@ -258,12 +251,12 @@ def bfs_distances_from(g: Graph, seeds: DataFrame,
         dist = dist.unionByName(reached).localCheckpoint(eager=True)
         frontier = reached
     e.unpersist()
-    return CentralityResult(df=dist, iterations=depth, metrics=metrics)
+    return IterativeResult(df=dist, iterations=depth, metrics=metrics)
 
 
 # -------------------------------------------------------------- k-core
 
-def k_core(g: Graph, k: int, max_rounds: int = 1000) -> CentralityResult:
+def k_core(g: Graph, k: int, max_rounds: int = 1000) -> IterativeResult:
     """The k-core of the undirected simple graph: the maximal subgraph in
     which every vertex has degree >= k. Iterative peeling — repeatedly drop
     vertices with within-subgraph degree < k until stable.
@@ -322,12 +315,12 @@ def k_core(g: Graph, k: int, max_rounds: int = 1000) -> CentralityResult:
     core = final_edges.groupBy(F.col("src").alias("id")).agg(
         F.count(F.lit(1)).alias("deg"))
     und.unpersist()
-    return CentralityResult(df=core, iterations=rounds, metrics=metrics)
+    return IterativeResult(df=core, iterations=rounds, metrics=metrics)
 
 
 def trust_rank(g: Graph, seed_weights: DataFrame,
                damping: float = 0.85,
-               num_iters: int = 20) -> CentralityResult:
+               num_iters: int = 20) -> IterativeResult:
     """TrustRank / topic-sensitive PageRank: personalized PageRank whose
     teleport distribution is an arbitrary non-negative weight vector
     (id, weight) — e.g. hand-vetted trusted seeds (Gyongyi et al., VLDB
@@ -393,10 +386,10 @@ def trust_rank(g: Graph, seed_weights: DataFrame,
             wall_s=time.monotonic() - t0))
     ew.unpersist()
     base.unpersist()
-    return CentralityResult(df=ranks, iterations=num_iters, metrics=metrics)
+    return IterativeResult(df=ranks, iterations=num_iters, metrics=metrics)
 
 
-def salsa(g: Graph, num_iters: int = 10) -> CentralityResult:
+def salsa(g: Graph, num_iters: int = 10) -> IterativeResult:
     """SALSA (Lempel-Moran 2000): hub/authority scores as stationary
     distributions of the bipartite backward-forward random walk — HITS
     with degree normalization instead of L2 normalization, which makes it
@@ -457,13 +450,13 @@ def salsa(g: Graph, num_iters: int = 10) -> CentralityResult:
                 F.coalesce("authority", F.lit(0.0)).alias("authority"))
     )
     ew.unpersist()
-    return CentralityResult(df=out, iterations=num_iters, metrics=metrics)
+    return IterativeResult(df=out, iterations=num_iters, metrics=metrics)
 
 
 # ------------------------------------------------------------------- Katz
 
 def katz(g: Graph, alpha: float = 0.02, beta: float = 1.0,
-         num_iters: int = 10) -> CentralityResult:
+         num_iters: int = 10) -> IterativeResult:
     """Katz centrality: x <- beta*1 + alpha * A^T x over the simple
     (deduped, self-loop-free) directed edge set, unrolled ``num_iters``
     sweeps. Converges geometrically when alpha < 1/lambda_max; the
@@ -509,12 +502,12 @@ def katz(g: Graph, alpha: float = 0.02, beta: float = 1.0,
     out = x.select("id", F.col("score").alias("katz"))
     edges.unpersist()
     verts.unpersist()
-    return CentralityResult(df=out, iterations=num_iters, metrics=metrics)
+    return IterativeResult(df=out, iterations=num_iters, metrics=metrics)
 
 
 # ------------------------------------------------- eigenvector centrality
 
-def eigenvector_centrality(g: Graph, num_iters: int = 20) -> CentralityResult:
+def eigenvector_centrality(g: Graph, num_iters: int = 20) -> IterativeResult:
     """Eigenvector centrality by power iteration: x <- L2-normalize(A^T x)
     over the simple self-loop-free directed edge set, from the all-ones
     start. Fixed ``num_iters`` sweeps (deterministic; with enough sweeps x
@@ -549,4 +542,4 @@ def eigenvector_centrality(g: Graph, num_iters: int = 20) -> CentralityResult:
     out = x.select("id", F.col("score").alias("eigenvector"))
     edges.unpersist()
     verts.unpersist()
-    return CentralityResult(df=out, iterations=num_iters, metrics=metrics)
+    return IterativeResult(df=out, iterations=num_iters, metrics=metrics)

@@ -38,14 +38,13 @@ extra column.
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..plans.fixpoint import IterativeResult
 from ..session import local_df
-from .components import IterativeResult
 from .graph import Graph, invert
 
 

@@ -1,12 +1,12 @@
 """Connected components and label propagation — iterative superstep kernels.
 
-Both reuse the engine's superstep skeleton (join + agg + localCheckpoint +
-driver-side convergence scalar), the same shape as PageRank
-(operators/pagerank.py) and the reference's prism activation loop
-(graphcoloring/Data/Graph/Prism.hs:299-317 — frontier-driven recompute).
-The reference itself has no CC/LP; they are north-rule scope
-(BASELINE.json: "connected components (iterative min-label hash-partitioned
-propagation), label propagation").
+Each tier here hands one superstep to the fixpoint driver
+(plans/fixpoint.py), which owns resume, the sweep budget, the stopping test
+(no label changed), snapshots and the release of the persisted edge set.
+Min-label CC and LP return the partial labels at their budget, the last
+metrics record carrying ``changed`` != 0. The reference itself has no
+CC/LP; they are north-rule scope (BASELINE.json: "connected components
+(iterative min-label hash-partitioned propagation), label propagation").
 
 Scale design:
 - the undirected simple edge set is computed once, hash-partitioned by src,
@@ -22,29 +22,16 @@ Scale design:
 
 from __future__ import annotations
 
-import time
-from dataclasses import dataclass, field
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import CheckpointManager, IterationMetrics
-from .graph import Graph, invert
+from ..plans.checkpoint import IterationMetrics
+from ..plans.fixpoint import IterativeResult, iterate
+from .graph import Graph, undirected_simple_edges
 
 
-@dataclass
-class IterativeResult:
-    df: DataFrame
-    iterations: int
-    metrics: list[IterationMetrics] = field(default_factory=list)
-
-
-def _undirected_simple(g: Graph, shuffle_p: int) -> DataFrame:
-    return (
-        g.edges.unionAll(invert(g.edges))
-        .dropDuplicates(["src", "dst"])
-        .repartition(shuffle_p, "src")
-    )
+def _by_id(labels: DataFrame, shuffle_p: int) -> DataFrame:
+    return labels.repartition(shuffle_p, "id").localCheckpoint(eager=True)
 
 
 def connected_components(
@@ -57,24 +44,13 @@ def connected_components(
     frontier. Returns (id, component) where component = min vertex id in the
     component — the invariant the tests assert (SURVEY.md §5.3).
     """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = _undirected_simple(g, shuffle_p).persist()
-
-    labels = g.vertices().select("id", F.col("id").alias("component"))
-    labels = labels.repartition(shuffle_p, "id").localCheckpoint(eager=True)
+    shuffle_p = int(g.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    edges = undirected_simple_edges(g).repartition(shuffle_p, "src").persist()
+    labels = _by_id(g.vertices().select("id", F.col("id").alias("component")),
+                    shuffle_p)
     # frontier: vertices whose label changed last round (all, initially)
-    frontier = labels
-    ckpt = CheckpointManager(checkpoint_dir, checkpoint_interval)
-    resumed = ckpt.resume(spark, required_columns=("id", "component")) \
-        if checkpoint_dir else None
-    start_iter = 0
-    if resumed is not None:
-        labels = resumed[0].repartition(shuffle_p, "id").localCheckpoint(eager=True)
-        frontier = labels  # conservative: full resend after resume
-        start_iter = resumed[1]
-    return _cc_frontier_loop(edges, labels, frontier, max_iters,
-                             start_iter, ckpt)
+    return _min_label(edges, labels, labels, max_iters, checkpoint_dir,
+                      checkpoint_interval)
 
 
 def connected_components_incremental(
@@ -102,18 +78,14 @@ def connected_components_incremental(
     one sweep without shuffling messages — the metrics' ``frontier_init``
     extra records the seed size so tests can assert the collapse.
     """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = _undirected_simple(g, shuffle_p).persist()
-
-    labels = (
+    shuffle_p = int(g.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    edges = undirected_simple_edges(g).repartition(shuffle_p, "src").persist()
+    labels = _by_id(
         g.vertices()
         .join(prev_labels.select("id", F.col("component").alias("prev")),
               "id", "left")
-        .select("id", F.coalesce("prev", F.col("id")).alias("component"))
-        .repartition(shuffle_p, "id")
-        .localCheckpoint(eager=True)
-    )
+        .select("id", F.coalesce("prev", F.col("id")).alias("component")),
+        shuffle_p)
     # disagreement scan: endpoints of edges whose labels differ. The dst
     # side suffices as message *receivers*; the undirected edge set holds
     # both directions, so each disagreeing endpoint appears as a dst.
@@ -132,38 +104,34 @@ def connected_components_incremental(
         .localCheckpoint(eager=True)
     )
     n_frontier = frontier.count()
-    ckpt = CheckpointManager(checkpoint_dir, checkpoint_interval)
-    res = _cc_frontier_loop(edges, labels, frontier, max_iters, 0, ckpt,
-                            skip_if_empty_frontier=n_frontier == 0)
-    if res.metrics:
-        res.metrics[0].extra["frontier_init"] = n_frontier
-    return res
-
-
-def _cc_frontier_loop(
-    edges: DataFrame,
-    labels: DataFrame,
-    frontier: DataFrame,
-    max_iters: int,
-    start_iter: int,
-    ckpt: CheckpointManager,
-    skip_if_empty_frontier: bool = False,
-) -> IterativeResult:
-    """Shared semi-naive min-label loop: messages flow only from last
-    round's changed vertices; stops when nothing changed."""
-    if skip_if_empty_frontier:
+    if n_frontier == 0:
         # converged warm start: nothing can change, skip the message sweeps
         edges.unpersist()
         return IterativeResult(df=labels, iterations=0, metrics=[
             IterationMetrics(iteration=0, l1_residual=0.0, linf_residual=0.0,
                              rows_shuffled=0, wall_s=0.0,
-                             extra={"changed": 0})])
+                             extra={"changed": 0, "frontier_init": 0})])
+    # snapshots are written, never resumed: a directory reused across
+    # batches holds an earlier batch's labels, which lack its new vertices
+    res = _min_label(edges, labels, frontier, max_iters, checkpoint_dir,
+                     checkpoint_interval, resumable=False)
+    if res.metrics:
+        res.metrics[0].extra["frontier_init"] = n_frontier
+    return res
+
+
+def _min_label(edges: DataFrame, labels: DataFrame, frontier: DataFrame,
+               max_iters: int, checkpoint_dir: str | None = None,
+               checkpoint_interval: int = 5,
+               resumable: bool = True) -> IterativeResult:
+    """Semi-naive min-label superstep: messages flow only from last
+    round's changed vertices. A resumed run resends from every vertex."""
     n_und_edges = edges.count()
-    metrics: list[IterationMetrics] = []
-    it = start_iter
-    while it < max_iters:
-        it += 1
-        t0 = time.monotonic()
+    shuffle_p = int(edges.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions", "32"))
+
+    def step(state):
+        labels, frontier = state
         # candidate labels pushed from last round's changed vertices only
         msgs = (
             edges.join(frontier.withColumnRenamed("id", "src"), "src")
@@ -182,21 +150,21 @@ def _cc_frontier_loop(
         )
         new_labels = new_labels.localCheckpoint(eager=False)
         n_changed = new_labels.where("_changed").count()
-        frontier = new_labels.where("_changed").select("id", "component")
-        new_labels = new_labels.select("id", "component")
-        m = IterationMetrics(
-            iteration=it, l1_residual=float(n_changed),
-            linf_residual=float(1 if n_changed else 0),
-            rows_shuffled=n_und_edges, wall_s=time.monotonic() - t0,
-            extra={"changed": n_changed},
-        )
-        metrics.append(m)
-        ckpt.write(new_labels, m)
-        labels = new_labels
-        if n_changed == 0:
-            break
-    edges.unpersist()
-    return IterativeResult(df=labels, iterations=it, metrics=metrics)
+        return ((new_labels.select("id", "component"),
+                 new_labels.where("_changed").select("id", "component")),
+                float(n_changed), float(1 if n_changed else 0), n_und_edges,
+                {"changed": n_changed})
+
+    def load(df: DataFrame):
+        labels = _by_id(df, shuffle_p)
+        return labels, labels
+
+    return iterate(
+        "connected_components", (labels, frontier), step,
+        save=lambda state: state[0], load=load if resumable else None,
+        columns=("id", "component"),
+        max_iters=max_iters, checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval, release=(edges,))
 
 
 # rounds of frontier min-label the top tier gets before the star fallback.
@@ -216,17 +184,19 @@ def connected_components_auto(g: Graph, **kw) -> IterativeResult:
     All tiers produce identical (id, component = min id)."""
     from .components_csr import connected_components_spmv
     from .components_local import connected_components_local
+    from .components_star import finish_with_star
     from .pagerank_csr import SPMV_MAX_VERTICES
     from .pagerank_local import LOCAL_MAX_EDGES
-    n_edges = g.edges.count()
-    if n_edges <= LOCAL_MAX_EDGES:
-        return connected_components_local(g)
-    if g.num_vertices <= SPMV_MAX_VERTICES:
-        return connected_components_spmv(g)
-    budget = kw.pop("max_iters", FRONTIER_ROUND_BUDGET)
-    res = connected_components(g, max_iters=budget, **kw)
-    if res.metrics and res.metrics[-1].extra.get("changed", 0) != 0:
-        from .components_star import finish_with_star
+    if g.edges.count() <= LOCAL_MAX_EDGES:
+        res = connected_components_local(g)
+    elif g.num_vertices <= SPMV_MAX_VERTICES:
+        res = connected_components_spmv(g)
+    else:
+        res = connected_components(
+            g, max_iters=kw.pop("max_iters", FRONTIER_ROUND_BUDGET), **kw)
+    # no sweep recorded (e.g. resumed at the budget) or still changing:
+    # finish by star contraction rather than return partial labels
+    if not res.metrics or res.metrics[-1].extra["changed"] != 0:
         return finish_with_star(g, res)
     return res
 
@@ -261,26 +231,11 @@ def label_propagation(
     The mode aggregation is two Catalyst-native stages: count per (dst,
     label), then a max_by-style reduce per dst — no Python in the loop.
     """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = _undirected_simple(g, shuffle_p).persist()
+    shuffle_p = int(g.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    edges = undirected_simple_edges(g).repartition(shuffle_p, "src").persist()
     n_und_edges = edges.count()
 
-    labels = g.vertices().select("id", F.col("id").alias("label"))
-    labels = labels.repartition(shuffle_p, "id").localCheckpoint(eager=True)
-    ckpt = CheckpointManager(checkpoint_dir, checkpoint_interval)
-    resumed = ckpt.resume(spark, required_columns=("id", "label")) \
-        if checkpoint_dir else None
-    start_iter = 0
-    if resumed is not None:
-        labels = resumed[0].repartition(shuffle_p, "id").localCheckpoint(eager=True)
-        start_iter = resumed[1]
-
-    metrics: list[IterationMetrics] = []
-    it = start_iter
-    while it < num_iters:
-        it += 1
-        t0 = time.monotonic()
+    def step(labels):
         counts = (
             edges.join(labels.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"), F.col("label"))
@@ -307,17 +262,15 @@ def label_propagation(
             .localCheckpoint(eager=False)
         )
         n_changed = new_labels.where("_changed").count()
-        new_labels = new_labels.select("id", "label")
-        m = IterationMetrics(
-            iteration=it, l1_residual=float(n_changed),
-            linf_residual=float(1 if n_changed else 0),
-            rows_shuffled=n_und_edges, wall_s=time.monotonic() - t0,
-            extra={"changed": n_changed},
-        )
-        metrics.append(m)
-        ckpt.write(new_labels, m)
-        labels = new_labels
-        if n_changed == 0:
-            break
-    edges.unpersist()
-    return IterativeResult(df=labels, iterations=it, metrics=metrics)
+        return (new_labels.select("id", "label"), float(n_changed),
+                float(1 if n_changed else 0), n_und_edges,
+                {"changed": n_changed})
+
+    return iterate(
+        "label_propagation",
+        _by_id(g.vertices().select("id", F.col("id").alias("label")),
+               shuffle_p),
+        step, save=lambda labels: labels,
+        load=lambda df: _by_id(df, shuffle_p), columns=("id", "label"),
+        max_iters=num_iters, checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval, release=(edges,))

@@ -15,18 +15,21 @@ Same semantics and output schema as the DataFrame paths
   ties -> smallest label, isolated vertices keep their own, early stop on
   a fixed sweep — bit-identical to components.label_propagation.
 
-``run_*_auto`` dispatchers live in operators/components.py.
+The fixpoint driver (plans/fixpoint.py) runs both loops;
+``dense_min_label`` is the CC sweep shared with the CSR tier
+(components_csr.py), which differs only in how it gathers candidate
+minima. ``run_*_auto`` dispatchers live in operators/components.py.
 """
 
 from __future__ import annotations
 
-import time
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
+from pyspark.sql import DataFrame
 
-from ..plans.checkpoint import IterationMetrics
-from .components import IterativeResult
+from ..plans.fixpoint import IterativeResult, iterate
 from .graph import Graph
 
 # reuse the PageRank local tier's envelope: ~16 bytes/edge collected
@@ -36,6 +39,8 @@ from .pagerank_local import LOCAL_MAX_EDGES  # noqa: F401  (re-export)
 def _collect_undirected(g: Graph) -> tuple[np.ndarray, np.ndarray]:
     """Deduped undirected edge set (both directions, self-loops dropped by
     the Graph contract) as numpy arrays."""
+    if not g.num_vertices:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
     pdf = g.edges.select("src", "dst").toPandas()
     s0 = pdf["src"].to_numpy(np.int64)
     d0 = pdf["dst"].to_numpy(np.int64)
@@ -51,39 +56,39 @@ def _collect_undirected(g: Graph) -> tuple[np.ndarray, np.ndarray]:
     return s[idx], d[idx]
 
 
-def _result_df(g: Graph, labels: np.ndarray, col: str,
-               iterations: int,
-               metrics: list[IterationMetrics]) -> IterativeResult:
-    df = g.spark.createDataFrame(pd.DataFrame({
+def _labels_df(g: Graph, labels: np.ndarray, col: str) -> DataFrame:
+    return g.spark.createDataFrame(pd.DataFrame({
         "id": np.arange(len(labels), dtype=np.int64), col: labels}))
-    return IterativeResult(df=df, iterations=iterations, metrics=metrics)
 
 
-def connected_components_local(g: Graph) -> IterativeResult:
-    """Min-label propagation + pointer jumping, entirely on the driver."""
-    n = g.num_vertices
-    if n == 0:
-        return _result_df(g, np.empty(0, np.int64), "component", 0, [])
-    s, d = _collect_undirected(g)
-    labels = np.arange(n, dtype=np.int64)
-    metrics: list[IterationMetrics] = []
-    if len(d):
-        order = np.argsort(d, kind="stable")
-        s_ord = s[order]
-        d_sorted = d[order]
-        head = np.empty(len(d_sorted), dtype=bool)
-        head[0] = True
-        head[1:] = d_sorted[1:] != d_sorted[:-1]
-        starts = np.flatnonzero(head)
-        uds = d_sorted[starts]
-    it = 0
-    while len(d):
-        it += 1
-        t0 = time.monotonic()
-        mins = np.minimum.reduceat(labels[s_ord], starts)
+def _run_heads(*keys: np.ndarray) -> np.ndarray:
+    """Mask of the first row of each run of equal ``keys`` (sorted)."""
+    head = np.empty(len(keys[0]), dtype=bool)
+    head[0] = True
+    head[1:] = np.logical_or.reduce([k[1:] != k[:-1] for k in keys])
+    return head
+
+
+def _identity(g: Graph, col: str) -> IterativeResult:
+    """Every vertex its own label, in 0 sweeps: the edgeless case."""
+    return IterativeResult(
+        _labels_df(g, np.arange(g.num_vertices, dtype=np.int64), col), 0)
+
+
+def dense_min_label(g: Graph,
+                    candidates: Callable[[np.ndarray],
+                                         tuple[np.ndarray, np.ndarray]],
+                    strategy: str, max_iters: int,
+                    release=()) -> IterativeResult:
+    """Min-label CC over a driver-resident label vector, shared by the local
+    and CSR tiers. ``candidates(labels)`` returns (vertex ids, minimum
+    neighbour label of each); the sweep compares and updates, pointer-jumps
+    and counts the changed labels."""
+    def step(labels: np.ndarray):
+        uids, mins = candidates(labels)
         new = labels.copy()
-        upd = mins < new[uds]
-        new[uds[upd]] = mins[upd]
+        upd = mins < new[uids]
+        new[uids[upd]] = mins[upd]
         # pointer jumping: collapse label chains in O(log depth) passes so
         # high-diameter graphs converge in few propagation rounds
         while True:
@@ -92,55 +97,59 @@ def connected_components_local(g: Graph) -> IterativeResult:
                 break
             new = nn
         changed = int((new != labels).sum())
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=float(changed),
-            linf_residual=float(1 if changed else 0), rows_shuffled=0,
-            wall_s=time.monotonic() - t0,
-            extra={"changed": changed, "strategy": "local"}))
-        labels = new
-        if changed == 0:
-            break
-    return _result_df(g, labels, "component", it, metrics)
+        return (new, float(changed), float(1 if changed else 0), 0,
+                {"changed": changed, "strategy": strategy})
+
+    return iterate(
+        f"connected_components_{strategy}",
+        np.arange(g.num_vertices, dtype=np.int64), step,
+        save=lambda labels: _labels_df(g, labels, "component"),
+        max_iters=max_iters, release=release)
+
+
+def connected_components_local(g: Graph) -> IterativeResult:
+    """Min-label propagation + pointer jumping, entirely on the driver."""
+    s, d = _collect_undirected(g)
+    if not len(d):
+        return _identity(g, "component")
+    order = np.argsort(d, kind="stable")
+    s_ord = s[order]
+    d_sorted = d[order]
+    starts = np.flatnonzero(_run_heads(d_sorted))
+    uds = d_sorted[starts]
+    # min-label converges within diameter + 1 <= |V| sweeps
+    return dense_min_label(
+        g, lambda labels: (uds, np.minimum.reduceat(labels[s_ord], starts)),
+        "local", max_iters=g.num_vertices)
 
 
 def label_propagation_local(g: Graph, num_iters: int = 5) -> IterativeResult:
     """Synchronous LP, vectorized: per sweep, one lexsort groups (dst,
     label) runs; the winner per dst is the run maximizing (count, -label)."""
-    n = g.num_vertices
-    if n == 0:
-        return _result_df(g, np.empty(0, np.int64), "label", 0, [])
     s, d = _collect_undirected(g)
-    labels = np.arange(n, dtype=np.int64)
-    metrics: list[IterationMetrics] = []
-    it = 0
-    while it < num_iters and len(d):
-        it += 1
-        t0 = time.monotonic()
+    if not len(d):
+        return _identity(g, "label")
+
+    def step(labels: np.ndarray):
         lab = labels[s]
         order = np.lexsort((lab, d))
         ds, ls = d[order], lab[order]
-        run_head = np.empty(len(ds), dtype=bool)
-        run_head[0] = True
-        run_head[1:] = (ds[1:] != ds[:-1]) | (ls[1:] != ls[:-1])
-        run_starts = np.flatnonzero(run_head)
+        run_starts = np.flatnonzero(_run_heads(ds, ls))
         run_dst = ds[run_starts]
         run_lab = ls[run_starts]
         run_cnt = np.diff(np.append(run_starts, len(ds)))
         # winner per dst: max count, then min label — lexsort minor-to-major
         w_order = np.lexsort((run_lab, -run_cnt, run_dst))
         wd, wl = run_dst[w_order], run_lab[w_order]
-        first = np.empty(len(wd), dtype=bool)
-        first[0] = True
-        first[1:] = wd[1:] != wd[:-1]
+        first = _run_heads(wd)
         new = labels.copy()
         new[wd[first]] = wl[first]
         changed = int((new != labels).sum())
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=float(changed),
-            linf_residual=float(1 if changed else 0), rows_shuffled=0,
-            wall_s=time.monotonic() - t0,
-            extra={"changed": changed, "strategy": "local"}))
-        labels = new
-        if changed == 0:
-            break
-    return _result_df(g, labels, "label", it, metrics)
+        return (new, float(changed), float(1 if changed else 0), 0,
+                {"changed": changed, "strategy": "local"})
+
+    return iterate(
+        "label_propagation_local",
+        np.arange(g.num_vertices, dtype=np.int64), step,
+        save=lambda labels: _labels_df(g, labels, "label"),
+        max_iters=num_iters)

@@ -28,6 +28,9 @@ Scale design (the reason this strategy exists):
 - convergence is detected by a (count, xxhash64-sum) fingerprint of the
   edge set — one tiny aggregate, no edge-set self-join.
 
+The fixpoint driver (plans/fixpoint.py) iterates the star pair and
+checkpoints the contracted edge set.
+
 Reference parity: the reference has no CC (north-rule scope); the
 semantics contract is components.connected_components, pinned by pytest
 parity on fixtures, random graphs, paths, and stars.
@@ -35,13 +38,10 @@ parity on fixtures, random graphs, paths, and stars.
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import CheckpointManager, IterationMetrics
-from .components import IterativeResult
+from ..plans.fixpoint import IterativeResult, iterate
 from .graph import Graph
 
 
@@ -99,7 +99,7 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
     return int(row["n"]), int(row["h"])
 
 
-def finish_with_star(g: Graph, partial: "IterativeResult") -> IterativeResult:
+def finish_with_star(g: Graph, partial: IterativeResult) -> IterativeResult:
     """Finish an UNCONVERGED min-label run by star contraction.
 
     Every intermediate min-label value is the id of some vertex in the same
@@ -152,61 +152,45 @@ def connected_components_star(
     small-star pair. Raises RuntimeError if the fixpoint is not reached
     within ``max_iters`` pairs (house rule: never return silently-partial
     labels)."""
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = (
-        g.edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(shuffle_p, "src")
-        .localCheckpoint(eager=True)
-    )
-    ckpt = CheckpointManager(checkpoint_dir, checkpoint_interval)
-    # the star path checkpoints the CONTRACTED EDGE SET (src, dst), while
-    # the min-label path checkpoints LABELS (id, component) — the
-    # required_columns guard turns a cross-strategy resume into a clear
-    # ValueError instead of an opaque AnalysisException inside a join
-    resumed = (ckpt.resume(spark, required_columns=("src", "dst"))
-               if checkpoint_dir else None)
-    start_iter = 0
-    if resumed is not None:
-        edges = (resumed[0].select("src", "dst")
-                 .repartition(shuffle_p, "src").localCheckpoint(eager=True))
-        start_iter = resumed[1]
+    shuffle_p = int(g.spark.conf.get("spark.sql.shuffle.partitions", "32"))
 
-    metrics: list[IterationMetrics] = []
+    def by_src(edges: DataFrame) -> DataFrame:
+        return (edges.select("src", "dst").repartition(shuffle_p, "src")
+                .localCheckpoint(eager=True))
+
+    edges = by_src(g.edges.where(F.col("src") != F.col("dst"))
+                   .dropDuplicates(["src", "dst"]))
     fp = _fingerprint(edges)
-    it = start_iter
-    converged = fp[0] == 0
-    while not converged and it < max_iters:
-        it += 1
-        t0 = time.monotonic()
-        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=True)
-        edges.unpersist()
-        edges = nxt
-        new_fp = _fingerprint(edges)
-        converged = new_fp == fp
-        m = IterationMetrics(
-            iteration=it, l1_residual=float(abs(new_fp[0] - fp[0])),
-            linf_residual=0.0 if converged else 1.0,
-            rows_shuffled=new_fp[0], wall_s=time.monotonic() - t0,
-            extra={"edges": new_fp[0], "changed": 0 if converged else 1},
-        )
-        metrics.append(m)
-        ckpt.write(edges, m)
-        fp = new_fp
-    if not converged:
-        raise RuntimeError(
-            f"star CC did not converge in {max_iters} rounds "
-            f"({fp[0]} edges remain active)")
 
+    def step(state):
+        edges, fp = state
+        nxt = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+        new_fp = _fingerprint(nxt)
+        same = new_fp == fp
+        return ((nxt, new_fp), float(abs(new_fp[0] - fp[0])),
+                0.0 if same else 1.0, new_fp[0],
+                {"edges": new_fp[0], "changed": 0 if same else 1})
+
+    def load(df: DataFrame):
+        edges = by_src(df)
+        return edges, _fingerprint(edges)
+
+    # the star path checkpoints the CONTRACTED EDGE SET (src, dst), while
+    # the min-label path checkpoints LABELS (id, component) — the columns
+    # guard turns a cross-strategy resume into a clear ValueError instead
+    # of an opaque AnalysisException inside a join
+    res = IterativeResult(edges, 0) if fp[0] == 0 else iterate(
+        "connected_components_star", (edges, fp), step,
+        save=lambda state: state[0], load=load, columns=("src", "dst"),
+        max_iters=max_iters, must_converge=True,
+        checkpoint_dir=checkpoint_dir,
+        checkpoint_interval=checkpoint_interval)
     # at the fixpoint the edge set is a star forest (child → component min);
     # centers and isolated vertices label themselves
     labels = (
         g.vertices()
-        .join(edges.select(F.col("src").alias("id"),
-                           F.col("dst").alias("c")), "id", "left")
+        .join(res.df.select(F.col("src").alias("id"),
+                            F.col("dst").alias("c")), "id", "left")
         .select("id", F.coalesce("c", F.col("id")).alias("component"))
     )
-    edges.unpersist()
-    return IterativeResult(df=labels, iterations=it, metrics=metrics)
+    return IterativeResult(labels, res.iterations, res.metrics)

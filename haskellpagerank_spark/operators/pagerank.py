@@ -11,12 +11,8 @@ entirely inside whole-stage codegen: no Python in the hot path.
 Every PageRank tier (this join path, CSR SpMV in pagerank_csr.py, the
 driver-local numpy tier in pagerank_local.py, block Gauss–Seidel in
 pagerank_async.py and per-colour Gauss–Seidel in pagerank_pp.py) hands one
-sweep to ``power_iterate``, which alone owns the iteration policy: resume
-from the last snapshot, the sweep budget (``num_iters`` or ``max_iters``
-plus one verification sweep after a resume at the budget), the
-``tol_norm`` stopping test, the manifest and snapshot writes, the
-return-previous choice, the did-not-converge error and the release of the
-tier's per-run relations on every exit path.
+sweep to the fixpoint driver, plans/fixpoint.py, through
+``iterate_ranks``, which reads the policy from ``PageRankConfig``.
 
 Two semantic modes (SURVEY.md §2.11):
 
@@ -46,13 +42,13 @@ Scale design (100 TB / 1000-executor reading of this code):
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import CheckpointManager, IterationMetrics
+from ..plans.checkpoint import IterationMetrics
+from ..plans.fixpoint import iterate
 from .graph import Graph, amend_sinks, out_degrees
 
 
@@ -107,65 +103,22 @@ def weighted_edges(g: Graph) -> DataFrame:
     )
 
 
-def power_iterate(name: str, cfg: PageRankConfig, spark, state, step,
-                  load, save, release=(), return_previous: bool = False
+def iterate_ranks(name: str, cfg: PageRankConfig, state, step, load, save,
+                  release=(), return_previous: bool = False
                   ) -> PageRankResult:
-    """The one PageRank iteration loop. A tier supplies its physical sweep:
-
-    - ``state``: the initial iterate (a DataFrame or a numpy vector);
-    - ``step(state) -> (new_state, l1, linf, rows_shuffled, extra)``;
-    - ``load(snapshot_df) -> state`` to resume from an (id, rank) snapshot;
-    - ``save(state) -> DataFrame`` of (id, rank), for snapshots and the
-      result;
-    - ``release``: per-run relations, unpersisted on every exit path;
-    - ``return_previous``: on convergence return the iterate BEFORE the
-      converging sweep (Jacobi, PageRankStep.hs:90); the Gauss–Seidel
-      tiers sweep a single buffer and return the state after it.
-
-    ``cfg.num_iters > 0`` runs that many sweeps in total; 0 runs until the
-    ``tol_norm`` residual is <= ``tol`` (the reference's shared threshold
-    flag, PageRank.hs:49-52), raising after ``max_iters``.
-    """
-    ckpt = CheckpointManager(cfg.checkpoint_dir, cfg.checkpoint_interval)
-    metrics: list[IterationMetrics] = []
-    try:
-        it = 0
-        if cfg.checkpoint_dir:
-            resumed = ckpt.resume(spark, required_columns=("id", "rank"))
-            if resumed is not None:
-                state, it = load(resumed[0]), resumed[1]
-        total_iters = cfg.num_iters if cfg.num_iters > 0 else cfg.max_iters
-        if cfg.num_iters == 0 and it >= total_iters:
-            # resumed at/past max_iters with a converged snapshot on disk: run
-            # one verification sweep instead of skipping the loop and raising
-            total_iters = it + 1
-        while it < total_iters:
-            it += 1
-            t0 = time.monotonic()
-            new, l1, linf, rows_shuffled, extra = step(state)
-            m = IterationMetrics(
-                iteration=it, l1_residual=l1, linf_residual=linf,
-                rows_shuffled=rows_shuffled,
-                wall_s=time.monotonic() - t0, extra=extra,
-            )
-            metrics.append(m)
-            snap = ckpt.should_snapshot(it)
-            ckpt.write(save(new) if snap else None, m, snapshot=snap)
-            prev, state = state, new
-            converged = (linf if cfg.tol_norm == "linf" else l1) <= cfg.tol
-            if cfg.num_iters == 0 and converged:
-                return PageRankResult(
-                    ranks=save(prev if return_previous else state),
-                    iterations=it, metrics=metrics)
-        if cfg.num_iters == 0:
-            raise RuntimeError(
-                f"{name} did not converge within max_iters={cfg.max_iters} "
-                f"(last linf={metrics[-1].linf_residual:.3e})")
-        return PageRankResult(ranks=save(state), iterations=it,
-                              metrics=metrics)
-    finally:
-        for rel in release:
-            rel.unpersist()
+    """Run a PageRank tier's sweep under ``plans.fixpoint.iterate`` with
+    ``cfg``'s policy: ``num_iters > 0`` runs exactly that many sweeps; 0
+    runs until the ``tol_norm`` residual is <= ``tol`` (the reference's
+    shared threshold flag, PageRank.hs:49-52), raising after
+    ``max_iters``. Snapshots and results are (id, rank) relations."""
+    res = iterate(
+        name, state, step, save, load=load, columns=("id", "rank"),
+        max_iters=cfg.num_iters or cfg.max_iters,
+        tol=None if cfg.num_iters else cfg.tol, norm=cfg.tol_norm,
+        must_converge=cfg.num_iters == 0, return_previous=return_previous,
+        checkpoint_dir=cfg.checkpoint_dir,
+        checkpoint_interval=cfg.checkpoint_interval, release=release)
+    return PageRankResult(res.df, res.iterations, res.metrics)
 
 
 def rank_residual(new: DataFrame, old: DataFrame) -> tuple[float, float]:
@@ -184,7 +137,7 @@ def rank_residual(new: DataFrame, old: DataFrame) -> tuple[float, float]:
 def run_pagerank(g: Graph, cfg: PageRankConfig | None = None,
                  init_ranks: DataFrame | None = None) -> PageRankResult:
     """Join-path PageRank: one Spark job per superstep + one scalar
-    residual agg, iterated by ``power_iterate``.
+    residual agg, iterated by ``iterate_ranks``.
 
     The per-iteration driver round-trip (residual collect) replaces the
     reference's shared IORef convergence flag (PageRank.hs:49-52).
@@ -237,8 +190,8 @@ def run_pagerank(g: Graph, cfg: PageRankConfig | None = None,
         return (new_ranks, *rank_residual(new_ranks, ranks),
                 n_edges + 2 * n_total, {})
 
-    return power_iterate(
-        "pagerank", cfg, spark, ranks.localCheckpoint(eager=True), step,
+    return iterate_ranks(
+        "pagerank", cfg, ranks.localCheckpoint(eager=True), step,
         load=lambda df: df.repartition(shuffle_p, "id")
         .localCheckpoint(eager=True),
         save=lambda ranks: ranks, release=(ew, base),

@@ -21,9 +21,8 @@ scheduling/locking: "pagerankND" hardcodes the parallel threshold to 9e6
 so it always runs the sequential pass (PageRankNonDet.hs:66,85-102);
 "pagerankVC" takes per-vertex MVars (PageRankVC.hs:87-104) and
 "pagerankEC" a global lock plus all neighbor MVars (PageRankEC.hs:96-114)
-— concurrency-control detail over identical math. ``power_iterate``
-(pagerank.py) runs the loop with ``return_previous=False``: stopping
-rule, resume, snapshots and release.
+— concurrency-control detail over identical math. The fixpoint
+driver (plans/fixpoint.py) runs the loop with ``return_previous=False``.
 
 This operator is the distributed realization of the one REPRODUCIBLE
 member of that schedule family (the BSP idealization): vertices are split
@@ -72,7 +71,7 @@ from pyspark.sql import functions as F
 
 from ..session import skip_unchanged_zip_rereads
 from .graph import Graph, amend_sinks
-from .pagerank import (PageRankConfig, PageRankResult, power_iterate,
+from .pagerank import (PageRankConfig, PageRankResult, iterate_ranks,
                        weighted_edges)
 
 #: the reference's sequential/parallel crossover (InternalPageRank.hs:26-27)
@@ -255,8 +254,8 @@ def run_pagerank_async(g: Graph, cfg: PageRankConfig | None = None,
                  "internal_edges": n_internal})
 
     # single buffer: the state AFTER the converging sweep (PageRank.hs:105)
-    return power_iterate(
-        "pagerank_async", cfg, spark,
+    return iterate_ranks(
+        "pagerank_async", cfg,
         base.select("block", "id", F.lit(float(init)).alias("rank"),
                     "has_out").localCheckpoint(eager=True),
         step,

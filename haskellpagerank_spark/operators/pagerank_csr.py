@@ -39,8 +39,8 @@ Scale envelope (explicit, by design):
 
 Numerics match the reference formula exactly: the per-sweep blend
 (dconst/damping/sink handling) is the one dense Jacobi step shared with
-pagerank_local.py, and the loop (stopping rule, resume, snapshots) is
-``power_iterate`` in pagerank.py; summation order inside a block is the
+pagerank_local.py, and the loop is the fixpoint driver
+(plans/fixpoint.py); summation order inside a block is the
 sorted-dst run order, so per-vertex sums agree with the NumPy oracle to
 <= 1e-15 relative (tests assert allclose 1e-12 vs the oracle and vs the
 join path).
@@ -203,7 +203,7 @@ def run_pagerank_spmv(g: Graph, cfg: PageRankConfig | None = None,
                       known_hub_ids=None) -> PageRankResult:
     """PageRank with CSR-block SpMV supersteps: the dense Jacobi sweep of
     ``dense_power_iterate`` with the link sum gathered by ``sweep_blocks``,
-    iterated by ``power_iterate`` (same semantics/flags as run_pagerank;
+    iterated by ``iterate_ranks`` (same semantics/flags as run_pagerank;
     see PageRankConfig). ``hub_threshold``: in-degree above
     which a dst is salted across blocks (None -> a quarter of the per-block
     edge budget, min 65536; 0 disables the skew probe).

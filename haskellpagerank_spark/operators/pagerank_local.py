@@ -12,9 +12,8 @@ distribute* there.
 This module is that choice, behind the same API: collect the edge list
 once (bounded by ``LOCAL_MAX_EDGES``, ~16 bytes/edge) and run the identical
 Jacobi semantics (sink reflect/redistribute, duplicate multiplicity,
-isolated-vertex pinning) in vectorized numpy; ``power_iterate``
-(pagerank.py) owns the loop: stopping rule, return-previous quirk,
-per-iteration metrics and checkpoints. ``dense_power_iterate`` is the
+isolated-vertex pinning) in vectorized numpy; the fixpoint driver
+(plans/fixpoint.py) owns the loop. ``dense_power_iterate`` is the
 dense Jacobi sweep shared with the CSR-SpMV tier, which differs only in
 how the link sum is computed. ``run_pagerank_auto`` (pagerank_csr)
 dispatches here first; the CSR-SpMV and shuffle-join strategies take over
@@ -35,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .graph import Graph
-from .pagerank import PageRankConfig, PageRankResult, power_iterate
+from .pagerank import PageRankConfig, PageRankResult, iterate_ranks
 
 # ~16 bytes/edge collected => 80 MB at the cap; far below driver memory
 LOCAL_MAX_EDGES = 5_000_000
@@ -85,8 +84,8 @@ def dense_power_iterate(g: Graph, cfg: PageRankConfig, outdeg: np.ndarray,
     # warm start: the previous converged state after an ingest batch
     x = (np.full(n, float(init)) if init_ranks is None
          else to_vec(init_ranks, float(init)))
-    return power_iterate(
-        f"pagerank_{strategy}", cfg, spark, x, step,
+    return iterate_ranks(
+        f"pagerank_{strategy}", cfg, x, step,
         load=lambda df: to_vec(df, 0.0), save=to_df, release=release,
         return_previous=cfg.return_previous_on_converge)
 

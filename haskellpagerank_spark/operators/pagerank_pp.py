@@ -11,8 +11,8 @@ with dConst = (1-d)/n_nonsink over the amended graph (:268-294), vertices
 with no out-edges pinned to 0 (:88), convergence when no vertex moved by
 more than ``threshold`` during a full sweep, and the buffer AFTER the final
 sweep returned (single buffer, unlike Jacobi's previous-iterate quirk).
-``power_iterate`` (pagerank.py) runs the loop with ``return_previous=False``:
-stopping rule, resume, snapshots and release.
+The fixpoint driver (plans/fixpoint.py) runs the loop with
+``return_previous=False``.
 
 Why the coloring makes this distributable: same-colored vertices are
 non-adjacent, so their in-neighborhoods never include each other — updating
@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from .coloring import greedy_coloring
 from .graph import Graph, amend_sinks, out_degrees
-from .pagerank import (PageRankConfig, PageRankResult, power_iterate,
+from .pagerank import (PageRankConfig, PageRankResult, iterate_ranks,
                        rank_residual, weighted_edges)
 
 
@@ -140,8 +140,8 @@ def run_pagerank_pp(g: Graph, cfg: PageRankConfig | None = None,
     # snapshots carry (id, rank); color/has_out are rebuilt from the
     # (deterministic) coloring + degree tables on resume. Single buffer:
     # the state AFTER the converging sweep (no previous-iterate quirk).
-    return power_iterate(
-        "pagerank_pp", cfg, spark,
+    return iterate_ranks(
+        "pagerank_pp", cfg,
         base.select(
             "id", "color", "has_out",
             F.when(F.col("has_out"), F.lit(float(init)))

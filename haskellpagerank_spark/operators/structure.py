@@ -40,22 +40,15 @@ Scale notes per operator:
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
+from ..plans.fixpoint import IterativeResult
 from ..session import local_df
 from .graph import Graph, invert, undirected_simple_edges
 from .triangles import triangles_per_vertex
-
-
-@dataclass
-class StructureResult:
-    df: DataFrame
-    iterations: int
-    metrics: list[IterationMetrics] = field(default_factory=list)
 
 
 # ------------------------------------------------- clustering coefficient
@@ -172,7 +165,7 @@ def _min_label_fixpoint(edges: DataFrame, labels: DataFrame,
 
 def strongly_connected_components(g: Graph,
                                   max_rounds: int = 100,
-                                  max_sweeps: int = 200) -> StructureResult:
+                                  max_sweeps: int = 200) -> IterativeResult:
     """SCC decomposition of the directed graph: (id, scc) with scc = the
     minimum vertex id in the component.
 
@@ -288,12 +281,12 @@ def strongly_connected_components(g: Graph,
         raise RuntimeError(
             f"SCC decomposition exhausted max_rounds={max_rounds} with "
             f"{remaining.count()} vertices unassigned")
-    return StructureResult(df=assigned, iterations=rounds, metrics=metrics)
+    return IterativeResult(df=assigned, iterations=rounds, metrics=metrics)
 
 
 # ----------------------------------------------------- bow-tie decomposition
 
-def bowtie(g: Graph, scc_labels: DataFrame | None = None) -> StructureResult:
+def bowtie(g: Graph, scc_labels: DataFrame | None = None) -> IterativeResult:
     """Broder bow-tie decomposition around the largest SCC:
     (id, component) with component in {'CORE', 'IN', 'OUT', 'OTHER'}.
 
@@ -335,7 +328,7 @@ def bowtie(g: Graph, scc_labels: DataFrame | None = None) -> StructureResult:
             .otherwise(F.lit("OTHER")).alias("component"),
         )
     )
-    return StructureResult(
+    return IterativeResult(
         df=out,
         iterations=res_scc.iterations if res_scc else 0,
         metrics=res_scc.metrics if res_scc else [])
@@ -344,7 +337,7 @@ def bowtie(g: Graph, scc_labels: DataFrame | None = None) -> StructureResult:
 # ------------------------------------------------------------- weighted SSSP
 
 def sssp(g: Graph, weighted_edges: DataFrame, sources: list[int],
-         max_rounds: int = 200) -> StructureResult:
+         max_rounds: int = 200) -> IterativeResult:
     """Single/multi-source shortest paths over non-negative edge weights
     (Bellman-Ford supersteps, semi-naive frontier). ``weighted_edges`` is
     (src, dst, w double); parallel edges are fine (min wins). Returns
@@ -414,7 +407,7 @@ def sssp(g: Graph, weighted_edges: DataFrame, sources: list[int],
         raise RuntimeError(
             f"SSSP still relaxing after max_rounds={max_rounds}; "
             "distances would be partial")
-    return StructureResult(df=dist, iterations=rounds, metrics=metrics)
+    return IterativeResult(df=dist, iterations=rounds, metrics=metrics)
 
 
 # ------------------------------------------------------ harmonic centrality
@@ -472,7 +465,7 @@ def _landmark_distances(g: Graph, landmarks: list[int], directed: bool,
 
 def harmonic_centrality(g: Graph, landmarks: list[int],
                         directed: bool = True,
-                        max_depth: int = 200) -> StructureResult:
+                        max_depth: int = 200) -> IterativeResult:
     """Harmonic centrality h(v) = sum over landmarks u != v reaching v of
     1/d(u, v), via one multi-landmark BFS with (lm, id) composite keys.
 
@@ -494,12 +487,12 @@ def harmonic_centrality(g: Graph, landmarks: list[int],
         .join(h, "id", "left")
         .select("id", F.coalesce("harmonic", F.lit(0.0)).alias("harmonic"))
     )
-    return StructureResult(df=out, iterations=depth, metrics=metrics)
+    return IterativeResult(df=out, iterations=depth, metrics=metrics)
 
 
 def harmonic_sampled(g: Graph, keep_num: int = 2, keep_den: int = 5,
                      directed: bool = True,
-                     max_depth: int = 200) -> StructureResult:
+                     max_depth: int = 200) -> IterativeResult:
     """Eppstein–Wang landmark-sampled harmonic centrality (Eppstein &
     Wang, SODA'01 "Fast approximation of centrality"): run the exact
     multi-landmark BFS from the deterministic LCG pivot set
@@ -521,7 +514,7 @@ def harmonic_sampled(g: Graph, keep_num: int = 2, keep_den: int = 5,
         "id",
         (F.col("harmonic") * F.lit(float(n)) / F.lit(float(len(pivots))))
         .alias("harmonic"))
-    return StructureResult(df=scaled, iterations=res.iterations,
+    return IterativeResult(df=scaled, iterations=res.iterations,
                            metrics=res.metrics)
 
 
@@ -921,7 +914,7 @@ def _scc_local_arrays(s, d, n, sweep_budget: int = 128):
         return _scc_kosaraju_arrays(s, d, n)
 
 
-def strongly_connected_components_local(g: Graph) -> StructureResult:
+def strongly_connected_components_local(g: Graph) -> IterativeResult:
     """Driver-local SCC — the COST tier (same dispatch reasoning as
     pagerank_local/components_local: below RAM scale, vectorized numpy
     beats any distributed plan). Output schema identical to the
@@ -940,13 +933,13 @@ def strongly_connected_components_local(g: Graph) -> StructureResult:
     comp = _scc_local_arrays(s, d, n)
     df = g.spark.createDataFrame(pd.DataFrame({
         "id": np.arange(n, dtype=np.int64), "scc": comp}))
-    return StructureResult(df=df, iterations=1, metrics=[IterationMetrics(
+    return IterativeResult(df=df, iterations=1, metrics=[IterationMetrics(
         iteration=1, l1_residual=0.0, linf_residual=0.0,
         rows_shuffled=len(s), wall_s=time.monotonic() - t0,
         extra={"strategy": "local"})])
 
 
-def strongly_connected_components_auto(g: Graph) -> StructureResult:
+def strongly_connected_components_auto(g: Graph) -> IterativeResult:
     """COST-tiered dispatch: driver-local numpy below LOCAL_MAX_EDGES,
     the distributed trim+FW/BW operator above (same outputs, asserted in
     tests)."""
@@ -989,7 +982,7 @@ def condensation(g: Graph, scc_labels: DataFrame | None = None) -> DataFrame:
 
 # ---------------------------------------------------------------- k-truss
 
-def k_truss(g: Graph, k: int, max_rounds: int = 1000) -> StructureResult:
+def k_truss(g: Graph, k: int, max_rounds: int = 1000) -> IterativeResult:
     """The k-truss of the undirected simple graph: the maximal subgraph in
     which every edge participates in >= k-2 triangles (within the
     subgraph). Returns surviving canonical edges with their within-truss
@@ -1077,10 +1070,10 @@ def k_truss(g: Graph, k: int, max_rounds: int = 1000) -> StructureResult:
             f"{max_rounds}; result would be a superset of the {k}-truss")
     out = support.where(F.col("support") >= k - 2) if support is not None \
         else canon.select("src", "dst", F.lit(0).alias("support"))
-    return StructureResult(df=out, iterations=rounds, metrics=metrics)
+    return IterativeResult(df=out, iterations=rounds, metrics=metrics)
 
 
-def trussness(g: Graph, max_rounds: int = 1000) -> StructureResult:
+def trussness(g: Graph, max_rounds: int = 1000) -> IterativeResult:
     """Full truss decomposition: every canonical edge's truss number
     (k-truss convention: ``trussness(e) = max k such that e is in the
     k-truss``; triangle-free edges get 2), via the EDGE h-index fixpoint —
@@ -1175,13 +1168,13 @@ def trussness(g: Graph, max_rounds: int = 1000) -> StructureResult:
     if not converged:
         raise RuntimeError(
             f"trussness h-index fixpoint not reached in {max_rounds} rounds")
-    return StructureResult(
+    return IterativeResult(
         df=labels.select("src", "dst",
                          (F.col("t") + F.lit(2)).alias("trussness")),
         iterations=rounds, metrics=metrics)
 
 
-def trussness_local(g: Graph) -> StructureResult:
+def trussness_local(g: Graph) -> IterativeResult:
     """Driver-local truss decomposition — the COST tier: the sequential
     min-support heap peel (oracle.trussness) on collected COO arrays.
     Measured 8.1s vs 43.9s for the 13-round distributed h-index fixpoint
@@ -1202,13 +1195,13 @@ def trussness_local(g: Graph) -> StructureResult:
         df = local_df(g.spark, [], "src LONG, dst LONG, trussness LONG")
     else:
         df = g.spark.createDataFrame(out)
-    return StructureResult(df=df, iterations=1, metrics=[IterationMetrics(
+    return IterativeResult(df=df, iterations=1, metrics=[IterationMetrics(
         iteration=1, l1_residual=0.0, linf_residual=0.0,
         rows_shuffled=len(pdf), wall_s=time.monotonic() - t0,
         extra={"strategy": "local"})])
 
 
-def trussness_auto(g: Graph, max_rounds: int = 1000) -> StructureResult:
+def trussness_auto(g: Graph, max_rounds: int = 1000) -> IterativeResult:
     """COST-tiered dispatch: driver-local min-support peel below
     LOCAL_MAX_EDGES, the distributed edge h-index fixpoint above
     (identical outputs — the truss decomposition is unique; asserted in
@@ -1298,7 +1291,7 @@ def assortativity(g: Graph) -> DataFrame:
 
 def closeness_centrality(g: Graph, landmarks: list[int],
                          directed: bool = True,
-                         max_depth: int = 200) -> StructureResult:
+                         max_depth: int = 200) -> IterativeResult:
     """Incoming closeness c(v) = (r_v - 1) / S_v, where r_v = number of
     landmarks reaching v (v itself included when it is a landmark) and
     S_v = sum of those distances; 0.0 when nothing else reaches v. Exact
@@ -1321,7 +1314,7 @@ def closeness_centrality(g: Graph, landmarks: list[int],
         .select("id",
                 F.coalesce("closeness", F.lit(0.0)).alias("closeness"))
     )
-    return StructureResult(df=out, iterations=depth, metrics=metrics)
+    return IterativeResult(df=out, iterations=depth, metrics=metrics)
 
 
 def jaccard_neighbors(g: Graph, min_common: int = 1,
@@ -1404,7 +1397,7 @@ def wl_refinement(g: Graph, rounds: int = 3) -> DataFrame:
     return labels.select("id", F.col("lbl").alias("wl_label"))
 
 
-def coreness(g: Graph, max_rounds: int = 1000) -> StructureResult:
+def coreness(g: Graph, max_rounds: int = 1000) -> IterativeResult:
     """Full core decomposition: every vertex's core number over the
     undirected simple graph, via the distributed h-index fixpoint
     (Montresor et al. 2011 / Lu et al. 2016): start c(v) = deg(v), then
@@ -1486,7 +1479,7 @@ def coreness(g: Graph, max_rounds: int = 1000) -> StructureResult:
     if not converged:
         raise RuntimeError(
             f"coreness h-index fixpoint not reached in {max_rounds} rounds")
-    return StructureResult(
+    return IterativeResult(
         df=labels.select("id", F.col("c").alias("coreness")),
         iterations=rounds, metrics=metrics)
 
@@ -1542,7 +1535,7 @@ def _coreness_local_arrays(s, d, n):
     return core
 
 
-def coreness_local(g: Graph) -> StructureResult:
+def coreness_local(g: Graph) -> IterativeResult:
     """Driver-local core decomposition — the COST tier (same dispatch
     reasoning as scc/cc/pagerank local kernels: below RAM scale the
     bucket peel beats 20+ distributed h-index rounds by orders of
@@ -1560,13 +1553,13 @@ def coreness_local(g: Graph) -> StructureResult:
                                   pdf["dst"].to_numpy("int64"), n)
     df = g.spark.createDataFrame(pd.DataFrame({
         "id": np.arange(n, dtype=np.int64), "coreness": core}))
-    return StructureResult(df=df, iterations=1, metrics=[IterationMetrics(
+    return IterativeResult(df=df, iterations=1, metrics=[IterationMetrics(
         iteration=1, l1_residual=0.0, linf_residual=0.0,
         rows_shuffled=len(pdf), wall_s=time.monotonic() - t0,
         extra={"strategy": "local"})])
 
 
-def coreness_auto(g: Graph, max_rounds: int = 1000) -> StructureResult:
+def coreness_auto(g: Graph, max_rounds: int = 1000) -> IterativeResult:
     """COST-tiered dispatch: driver-local Batagelj-Zaversnik peel below
     LOCAL_MAX_EDGES, the distributed h-index fixpoint above (identical
     outputs — the core decomposition is unique; asserted in tests)."""

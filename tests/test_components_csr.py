@@ -42,3 +42,11 @@ def test_spmv_cc_leaves_no_cached_blocks(spark):
     before = persisted()
     connected_components_spmv(from_pairs(spark, FIXTURE_EDGES["princeton"]))
     assert persisted() <= before
+
+
+def test_spmv_cc_budget_reports_unconverged(spark):
+    # a path needs one sweep to change labels and one to see none change
+    g = from_pairs(spark, [(0, 1), (1, 2)])
+    res = connected_components_spmv(g, max_iters=1)
+    assert res.iterations == 1
+    assert res.metrics[-1].extra["changed"] != 0

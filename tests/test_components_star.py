@@ -170,3 +170,51 @@ def test_minlabel_resume_rejects_star_checkpoint(spark, tmp_path):
     connected_components_star(g, checkpoint_dir=ckdir, checkpoint_interval=1)
     with pytest.raises(ValueError, match="different strategy"):
         connected_components(g, checkpoint_dir=ckdir, checkpoint_interval=1)
+
+
+def test_star_resume_at_budget_returns_converged_labels(spark, tmp_path):
+    """A star run that converged at exactly ``max_iters`` leaves its star
+    forest as the last snapshot; re-running with the same budget runs one
+    verification round instead of raising."""
+    g = from_pairs(spark, [(i, i + 1) for i in range(40)])
+    k = connected_components_star(g).iterations
+    ckdir = str(tmp_path / "star")
+    first = connected_components_star(g, max_iters=k, checkpoint_dir=ckdir,
+                                      checkpoint_interval=1)
+    again = connected_components_star(g, max_iters=k, checkpoint_dir=ckdir,
+                                      checkpoint_interval=1)
+    want = {i: 0 for i in range(41)}
+    assert {r["id"]: r["component"] for r in first.df.collect()} == want
+    assert {r["id"]: r["component"] for r in again.df.collect()} == want
+
+
+def test_auto_resumed_at_budget_finishes_with_star(spark, tmp_path,
+                                                   monkeypatch):
+    """Join-path CC resumed at its budget records no sweep; auto must read
+    that as unconverged and finish by star, not return the snapshot."""
+    from haskellpagerank_spark.operators import components as C
+    from haskellpagerank_spark.operators import pagerank_csr, pagerank_local
+
+    monkeypatch.setattr(pagerank_local, "LOCAL_MAX_EDGES", 0)
+    monkeypatch.setattr(pagerank_csr, "SPMV_MAX_VERTICES", 0)
+    g = from_pairs(spark, [(i, i + 1) for i in range(30)])
+    ck = dict(max_iters=4, checkpoint_dir=str(tmp_path / "cc"),
+              checkpoint_interval=1)
+    for _ in range(2):  # the second run resumes at iteration 4
+        res = C.connected_components_auto(g, **ck)
+        got = {r["id"]: r["component"] for r in res.df.collect()}
+        assert got == {i: 0 for i in range(31)}
+
+
+def test_auto_finishes_unconverged_spmv_with_star(spark, monkeypatch):
+    """With the local tier bypassed, auto's SpMV tier must never return
+    partial labels on a long path."""
+    from haskellpagerank_spark.operators import components as C
+    from haskellpagerank_spark.operators import pagerank_local
+
+    monkeypatch.setattr(pagerank_local, "LOCAL_MAX_EDGES", 0)
+    n = 300
+    g = from_pairs(spark, [(i, i + 1) for i in range(n - 1)])
+    res = C.connected_components_auto(g)
+    got = {r["id"]: r["component"] for r in res.df.collect()}
+    assert got == {i: 0 for i in range(n)}

@@ -10,6 +10,12 @@ from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from haskellpagerank_spark import oracle as O
 from haskellpagerank_spark.fixtures import FIXTURE_EDGES
+from haskellpagerank_spark.operators.components import (
+    connected_components, connected_components_incremental, label_propagation)
+from haskellpagerank_spark.operators.components_csr import (
+    connected_components_spmv)
+from haskellpagerank_spark.operators.components_star import (
+    connected_components_star)
 from haskellpagerank_spark.operators.graph import from_pairs
 from haskellpagerank_spark.operators.pagerank import (
     PageRankConfig, reference_config, run_pagerank)
@@ -80,17 +86,13 @@ TIERS = {"join": run_pagerank, "spmv": run_pagerank_spmv,
          "pp": run_pagerank_pp}
 
 
-@pytest.mark.parametrize("tier", list(TIERS))
-def test_releases_relations_on_every_exit(spark, tmp_path, monkeypatch,
-                                          tier):
-    """Every exit path of every PageRank tier releases what the tier
-    cached: a fixed-sweep run, a checkpoint resume run to convergence, the
-    did-not-converge error and a run whose second sweep raises. Every
-    frame the tier persisted ends uncached; for SpMV the session's
-    persisted RDDs also gain no id (the DataFrame tiers' per-sweep
+@pytest.fixture
+def released(spark, monkeypatch):
+    """``released(rdds)`` asserts that every frame passed to
+    ``DataFrame.persist`` so far ends uncached and, with ``rdds``, that the
+    session's persisted RDDs gained no id. The DataFrame tiers' per-sweep
     localCheckpoint RDDs stay registered until the JVM collects them, so
-    their ids are not compared)."""
-    run = TIERS[tier]
+    only the tiers that sweep a cached RDD compare ids."""
     jsc = spark.sparkContext._jsc
     persisted = []
     persist = ClassicDataFrame.persist
@@ -100,30 +102,17 @@ def test_releases_relations_on_every_exit(spark, tmp_path, monkeypatch,
         return persist(self, *args, **kwargs)
 
     monkeypatch.setattr(ClassicDataFrame, "persist", spy)
+    before = set(jsc.getPersistentRDDs().keys())
 
-    def rdd_ids():
-        return set(jsc.getPersistentRDDs().keys())
-
-    before = rdd_ids()
-
-    def released():
+    def check(rdds: bool) -> None:
         assert not [df for df in persisted if df.is_cached]
-        if tier == "spmv":
-            assert rdd_ids() <= before
+        if rdds:
+            assert set(jsc.getPersistentRDDs().keys()) <= before
 
-    g = from_pairs(spark, FIXTURE_EDGES["hub"] + FIXTURE_EDGES["doubleSquare"])
-    ck = str(tmp_path / "ck")
-    run(g, reference_config(num_iters=2, checkpoint_dir=ck,
-                            checkpoint_interval=1))
-    released()
-    resumed = run(g, reference_config(checkpoint_dir=ck,
-                                      checkpoint_interval=1))
-    assert resumed.metrics[0].iteration == 3
-    released()
-    with pytest.raises(RuntimeError, match="did not converge"):
-        run(g, reference_config(tol=0.0, max_iters=1))
-    released()
+    return check
 
+
+def _fail_second_write(monkeypatch):
     write = CheckpointManager.write
 
     def failing_write(self, state, metrics, snapshot=None):
@@ -132,11 +121,78 @@ def test_releases_relations_on_every_exit(spark, tmp_path, monkeypatch,
         return write(self, state, metrics, snapshot)
 
     monkeypatch.setattr(CheckpointManager, "write", failing_write)
+
+
+@pytest.mark.parametrize("tier", list(TIERS))
+def test_releases_relations_on_every_exit(spark, tmp_path, monkeypatch,
+                                          released, tier):
+    """Every exit path of every PageRank tier releases what the tier
+    cached: a fixed-sweep run, a checkpoint resume run to convergence, the
+    did-not-converge error and a run whose second sweep raises."""
+    run = TIERS[tier]
+    g = from_pairs(spark, FIXTURE_EDGES["hub"] + FIXTURE_EDGES["doubleSquare"])
+    ck = str(tmp_path / "ck")
+    run(g, reference_config(num_iters=2, checkpoint_dir=ck,
+                            checkpoint_interval=1))
+    released(tier == "spmv")
+    resumed = run(g, reference_config(checkpoint_dir=ck,
+                                      checkpoint_interval=1))
+    assert resumed.metrics[0].iteration == 3
+    released(tier == "spmv")
+    with pytest.raises(RuntimeError, match="did not converge"):
+        run(g, reference_config(tol=0.0, max_iters=1))
+    released(tier == "spmv")
+
+    _fail_second_write(monkeypatch)
     with pytest.raises(OSError, match="injected"):
         run(g, reference_config(num_iters=2,
                                 checkpoint_dir=str(tmp_path / "ck_fail"),
                                 checkpoint_interval=1))
-    released()
+    released(tier == "spmv")
+
+
+def _spmv_cc(g, max_iters=200, checkpoint_dir=None, checkpoint_interval=5):
+    return connected_components_spmv(g, max_iters)  # no checkpoint options
+
+
+CC_TIERS = {
+    "cc_join": connected_components,
+    "cc_incremental": lambda g, **kw: connected_components_incremental(
+        g, g.vertices().selectExpr("id", "id AS component"), **kw),
+    "lp": lambda g, max_iters=5, **kw: label_propagation(g, max_iters, **kw),
+    "cc_spmv": _spmv_cc,
+    "cc_star": connected_components_star,
+}
+
+
+@pytest.mark.parametrize("tier", list(CC_TIERS))
+def test_cc_family_releases_relations_on_every_exit(
+        spark, tmp_path, monkeypatch, released, tier):
+    """The same for the CC and LP tiers: a run stopped at its budget, a
+    checkpoint resume, a resume at the budget and a run whose second sweep
+    raises. Star CC must converge, so its budget run raises instead."""
+    run = CC_TIERS[tier]
+    g = from_pairs(spark, [(i, i + 1) for i in range(15)])
+    ck = dict(checkpoint_dir=str(tmp_path / "ck"), checkpoint_interval=1)
+    if tier == "cc_star":
+        with pytest.raises(RuntimeError, match="did not converge"):
+            run(g, max_iters=2, **ck)
+    else:
+        assert run(g, max_iters=2, **ck).iterations == 2
+    released(tier == "cc_spmv")
+    resumed = run(g, **ck)
+    # CSR CC takes no checkpoint options; incremental CC only writes them
+    first = 1 if tier in ("cc_spmv", "cc_incremental") else 3
+    assert resumed.metrics[0].iteration == first
+    released(tier == "cc_spmv")
+    run(g, max_iters=resumed.iterations, **ck)
+    released(tier == "cc_spmv")
+
+    _fail_second_write(monkeypatch)
+    with pytest.raises(OSError, match="injected"):
+        run(g, checkpoint_dir=str(tmp_path / "ck_fail"),
+            checkpoint_interval=1)
+    released(tier == "cc_spmv")
 
 
 def test_auto_dispatch_tiers(spark):
