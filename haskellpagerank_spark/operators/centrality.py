@@ -1,23 +1,27 @@
-"""Link-analysis centralities beyond PageRank: HITS, personalized PageRank,
-multi-source BFS distances, and k-core peeling.
+"""Link-analysis centralities beyond PageRank: HITS, SALSA, Katz,
+eigenvector centrality, TrustRank / personalized PageRank, multi-source
+BFS distances, and k-core peeling.
 
 The reference engine's only centrality is PageRank (pagerank/Data/Graph/
 PageRank*.hs); these are engine extensions a link-graph user reaches for
-next — same superstep skeleton (join + partial/final agg + localCheckpoint
-+ one scalar collect per round) as operators/pagerank.py and
-operators/components.py, so every property argued there (map-side combine,
-|V|-row-only shuffles per sweep, AQE skew splitting, bounded lineage)
-carries over.
+next. Each kernel builds its per-run relations once and hands one sweep
+to the fixpoint driver, plans/fixpoint.py, which owns the sweep budget,
+the stopping test, the metrics and the release of those relations on
+every exit path. A sweep is the join + partial/final agg +
+localCheckpoint shape of operators/pagerank.py, so every property argued
+there (map-side combine, |V|-row-only shuffles per sweep, AQE skew
+splitting, bounded lineage) carries over.
 
 Scale notes per operator:
 - ``hits``: the edge set is deduped once, hash-partitioned by the join key
   and persisted; each half-step shuffles only the |V|-row score vector.
   Normalization is a 1-row broadcast crossJoin (no driver round-trip inside
   the plan).
-- ``personalized_pagerank``: identical plan shape to run_pagerank
-  redistribute mode; the teleport vector is a column predicate on the seed
-  set (broadcast semi-join for large seed tables), never a driver loop.
-- ``bfs_distances``: semi-naive frontier expansion — each round joins ONLY
+- ``trust_rank``: identical plan shape to run_pagerank redistribute mode;
+  the teleport vector is a joined column, never a driver loop or an
+  ``isin`` literal. ``personalized_pagerank`` is trust_rank with unit
+  weight per seed.
+- ``bfs_levels``: semi-naive frontier expansion — each round joins ONLY
   the newly-reached frontier against the edge table, so total work is
   O(sum of frontier-adjacent edges) = O(|E|) across the whole run, not
   O(|E| * diameter).
@@ -29,16 +33,33 @@ Scale notes per operator:
 
 from __future__ import annotations
 
-import time
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..plans.checkpoint import IterationMetrics
-from ..plans.fixpoint import IterativeResult
+from ..plans.fixpoint import IterativeResult, iterate
 from ..session import local_df
 from .graph import Graph, invert, out_degrees
 from .pagerank import weighted_edges
+
+
+def _shuffle_partitions(g: Graph) -> int:
+    return int(g.spark.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def _simple_edges(g: Graph, drop_self_loops: bool):
+    """(edges, |edges|, vertices): the deduped directed edge set
+    hash-partitioned by src and the vertex set by id, both persisted."""
+    shuffle_p = _shuffle_partitions(g)
+    e = g.edges.where(F.col("src") != F.col("dst")) if drop_self_loops \
+        else g.edges
+    edges = (
+        e.dropDuplicates(["src", "dst"])
+        .repartition(shuffle_p, "src")
+        .persist()
+    )
+    n_edges = edges.count()
+    verts = g.vertices().repartition(shuffle_p, "id").persist()
+    return edges, n_edges, verts
 
 
 # ------------------------------------------------------------------- HITS
@@ -53,38 +74,27 @@ def hits(g: Graph, num_iters: int = 10) -> IterativeResult:
     Returns (id, hub, authority) for the dense vertex space; vertices with
     no in-edges get authority 0, no out-edges hub 0.
     """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = (
-        g.edges.dropDuplicates(["src", "dst"])
-        .repartition(shuffle_p, "src")
-        .persist()
-    )
-    n_edges = edges.count()
-    verts = g.vertices().repartition(shuffle_p, "id").persist()
+    edges, n_edges, verts = _simple_edges(g, drop_self_loops=False)
 
-    hub = verts.select("id", F.lit(1.0).alias("score"))
-    auth = verts.select("id", F.lit(0.0).alias("score"))
-    metrics: list[IterationMetrics] = []
-    for it in range(1, num_iters + 1):
-        t0 = time.monotonic()
+    def step(scores):
+        hub, _ = scores
         # materialize each half-sweep: hub is built from the checkpointed
         # authority, so no job recomputes the other half
         auth = _gather_normalize(edges, verts, hub, out_key="dst",
                                  in_key="src").localCheckpoint(eager=True)
         hub = _gather_normalize(edges, verts, auth, out_key="src",
                                 in_key="dst").localCheckpoint(eager=True)
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=0.0, linf_residual=0.0,
-            rows_shuffled=2 * (n_edges + g.num_vertices),
-            wall_s=time.monotonic() - t0))
-    out = (
-        hub.withColumnRenamed("score", "hub")
-        .join(auth.withColumnRenamed("score", "authority"), "id")
-    )
-    edges.unpersist()
-    verts.unpersist()
-    return IterativeResult(df=out, iterations=num_iters, metrics=metrics)
+        return (hub, auth), 0.0, 0.0, 2 * (n_edges + g.num_vertices), {}
+
+    def save(scores):
+        hub, auth = scores
+        return hub.withColumnRenamed("score", "hub").join(
+            auth.withColumnRenamed("score", "authority"), "id")
+
+    start = (verts.select("id", F.lit(1.0).alias("score")),
+             verts.select("id", F.lit(0.0).alias("score")))
+    return iterate("hits", start, step, save, max_iters=num_iters, tol=None,
+                   release=(edges, verts))
 
 
 def _gather_normalize(edges: DataFrame, verts: DataFrame, scores: DataFrame,
@@ -110,7 +120,7 @@ def _gather_normalize(edges: DataFrame, verts: DataFrame, scores: DataFrame,
     )
 
 
-# ---------------------------------------------------- personalized PageRank
+# ---------------------------------------- TrustRank / personalized PageRank
 
 def personalized_pagerank(g: Graph, seeds: list[int],
                           damping: float = 0.85,
@@ -122,200 +132,15 @@ def personalized_pagerank(g: Graph, seeds: list[int],
 
         r_{i+1} = (1-d) * p + d * (W^T r_i + dangling_mass(r_i) * p)
 
-    with p(v) = 1/|seeds| on the seed set. Init r_0 = p. Fixed-sweep and
-    deterministic so the DuckDB twin (queries.ppr_sql) matches fp-op for
-    fp-op.
+    with p(v) = 1/|seeds| on the seed set. Init r_0 = p. This is
+    ``trust_rank`` with weight 1.0 per distinct seed (1.0/k is the same
+    double on both paths). Fixed-sweep and deterministic so the DuckDB
+    twin (queries.ppr_sql) matches fp-op for fp-op.
     """
     if not seeds:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    seed_set = sorted({int(s) for s in seeds})
-    p0 = 1.0 / len(seed_set)
-    d = damping
-
-    ew = weighted_edges(g).repartition(shuffle_p, "src").persist()
-    n_edges = ew.count()
-    base = (
-        out_degrees(g)
-        .select("id", (F.col("deg") > 0).alias("has_out"),
-                F.col("id").isin(seed_set).alias("is_seed"))
-        .repartition(shuffle_p, "id")
-        .persist()
-    )
-    base.count()
-
-    teleport = F.when(F.col("is_seed"), F.lit(p0)).otherwise(F.lit(0.0))
-    ranks = base.select("id", teleport.alias("rank")) \
-        .localCheckpoint(eager=True)
-
-    metrics: list[IterationMetrics] = []
-    for it in range(1, num_iters + 1):
-        t0 = time.monotonic()
-        msgs = (
-            ew.join(ranks.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("w") * F.col("rank")).alias("msg"))
-        )
-        dangling = (
-            ranks.join(base.where(~F.col("has_out")), "id")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
-        )
-        ranks = (
-            base.join(msgs, "id", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "id",
-                (
-                    F.lit(1.0 - d) * teleport
-                    + F.lit(d) * (F.coalesce("msg", F.lit(0.0))
-                                  + F.col("_dang") * teleport)
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=0.0, linf_residual=0.0,
-            rows_shuffled=n_edges + g.num_vertices,
-            wall_s=time.monotonic() - t0))
-    ew.unpersist()
-    base.unpersist()
-    return IterativeResult(df=ranks, iterations=num_iters, metrics=metrics)
-
-
-# --------------------------------------------------------- BFS distances
-
-def bfs_distances(g: Graph, sources: list[int],
-                  directed: bool = True,
-                  max_depth: int = 200) -> IterativeResult:
-    """Multi-source BFS hop distances (semi-naive frontier expansion).
-
-    Returns (id, dist) for REACHED vertices only — dist = minimum hop count
-    from any source. ``directed=False`` walks the undirected view. The
-    frontier pattern is the prism activation loop (Prism.hs:299-317): each
-    round joins only last round's newly-reached set to the edge table, so
-    every edge is expanded at most once per endpoint discovery.
-    """
-    if not sources:
-        raise ValueError("bfs_distances needs at least one source")
-    src_set = sorted({int(s) for s in sources})
-    seeds = local_df(g.spark, [(s,) for s in src_set], "id long")
-    return bfs_distances_from(g, seeds, directed=directed,
-                              max_depth=max_depth)
-
-
-def bfs_distances_from(g: Graph, seeds: DataFrame,
-                       directed: bool = True,
-                       max_depth: int = 200) -> IterativeResult:
-    """`bfs_distances` seeded from a DataFrame (id) instead of a driver-side
-    list — the scale path: a seed set of any size (e.g. a whole SCC in
-    bowtie) stays distributed, never a collect or an ``isin`` plan literal.
-    """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = g.edges.dropDuplicates(["src", "dst"])
-    if not directed:
-        e = e.unionAll(invert(g.edges)).dropDuplicates(["src", "dst"])
-    e = e.repartition(shuffle_p, "src").persist()
-    e.count()
-
-    dist = (
-        g.vertices().join(seeds.select("id"), "id", "left_semi")
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .repartition(shuffle_p, "id")
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    metrics: list[IterationMetrics] = []
-    depth = 0
-    while depth < max_depth:
-        depth += 1
-        t0 = time.monotonic()
-        reached = (
-            e.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
-            .dropDuplicates(["id"])
-            .join(dist, "id", "left_anti")
-            .select("id", F.lit(depth).cast("long").alias("dist"))
-            .localCheckpoint(eager=True)
-        )
-        n_new = reached.count()
-        metrics.append(IterationMetrics(
-            iteration=depth, l1_residual=float(n_new),
-            linf_residual=float(1 if n_new else 0),
-            rows_shuffled=n_new, wall_s=time.monotonic() - t0,
-            extra={"reached": n_new}))
-        if n_new == 0:
-            depth -= 1
-            break
-        dist = dist.unionByName(reached).localCheckpoint(eager=True)
-        frontier = reached
-    e.unpersist()
-    return IterativeResult(df=dist, iterations=depth, metrics=metrics)
-
-
-# -------------------------------------------------------------- k-core
-
-def k_core(g: Graph, k: int, max_rounds: int = 1000) -> IterativeResult:
-    """The k-core of the undirected simple graph: the maximal subgraph in
-    which every vertex has degree >= k. Iterative peeling — repeatedly drop
-    vertices with within-subgraph degree < k until stable.
-
-    Returns (id, deg): surviving vertices with their degree INSIDE the core
-    (the output is empty when no k-core exists). Deterministic; the
-    fixpoint is independent of peel order, so the DuckDB twin is the same
-    peel unrolled.
-    """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    und = (
-        g.edges.unionAll(invert(g.edges))
-        .dropDuplicates(["src", "dst"])
-        .repartition(shuffle_p, "src")
-        .persist()
-    )
-    und.count()
-
-    # survivors start as every endpoint (isolated vertices have degree 0 —
-    # never in a k-core for k >= 1)
-    alive = (
-        und.select(F.col("src").alias("id")).dropDuplicates()
-        .localCheckpoint(eager=True)
-    )
-    n_alive = alive.count()
-    metrics: list[IterationMetrics] = []
-    rounds = 0
-    while rounds < max_rounds:
-        rounds += 1
-        t0 = time.monotonic()
-        live_edges = (
-            und.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
-        )
-        deg = live_edges.groupBy(F.col("src").alias("id")).agg(
-            F.count(F.lit(1)).alias("deg"))
-        new_alive = deg.where(F.col("deg") >= k).select("id") \
-            .localCheckpoint(eager=True)
-        n_new = new_alive.count()
-        metrics.append(IterationMetrics(
-            iteration=rounds, l1_residual=float(n_alive - n_new),
-            linf_residual=float(1 if n_new != n_alive else 0),
-            rows_shuffled=n_alive, wall_s=time.monotonic() - t0,
-            extra={"peeled": n_alive - n_new}))
-        if n_new == n_alive:
-            break
-        alive, n_alive = new_alive, n_new
-        if n_new == 0:
-            break
-    # final in-core degree over the surviving subgraph (empty if no core)
-    final_edges = (
-        und.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
-        .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
-    )
-    core = final_edges.groupBy(F.col("src").alias("id")).agg(
-        F.count(F.lit(1)).alias("deg"))
-    und.unpersist()
-    return IterativeResult(df=core, iterations=rounds, metrics=metrics)
+    weights = seed_frame(g.spark, seeds).withColumn("weight", F.lit(1.0))
+    return trust_rank(g, weights, damping=damping, num_iters=num_iters)
 
 
 def trust_rank(g: Graph, seed_weights: DataFrame,
@@ -327,12 +152,11 @@ def trust_rank(g: Graph, seed_weights: DataFrame,
     2004) or per-page quality scores. Weights are normalized to sum 1;
     dangling mass returns to the same distribution.
 
-    Same superstep plan as personalized_pagerank, but the teleport vector
-    is a JOINED column, never an `isin` literal — the seed table can be
-    |V|-sized (quality-score teleport) without touching the driver.
+    The teleport vector is a JOINED column, never an `isin` literal — the
+    seed table can be |V|-sized (quality-score teleport) without touching
+    the driver.
     """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    shuffle_p = _shuffle_partitions(g)
     d = damping
 
     total = seed_weights.agg(F.sum("weight").alias("t")).first()["t"]
@@ -353,11 +177,7 @@ def trust_rank(g: Graph, seed_weights: DataFrame,
     )
     base.count()
 
-    ranks = base.select("id", F.col("p").alias("rank")) \
-        .localCheckpoint(eager=True)
-    metrics: list[IterationMetrics] = []
-    for it in range(1, num_iters + 1):
-        t0 = time.monotonic()
+    def step(ranks):
         msgs = (
             ew.join(ranks.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
@@ -367,7 +187,7 @@ def trust_rank(g: Graph, seed_weights: DataFrame,
             ranks.join(base.where(~F.col("has_out")), "id")
             .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
         )
-        ranks = (
+        new = (
             base.join(msgs, "id", "left")
             .crossJoin(F.broadcast(dangling))
             .select(
@@ -380,14 +200,156 @@ def trust_rank(g: Graph, seed_weights: DataFrame,
             )
             .localCheckpoint(eager=True)
         )
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=0.0, linf_residual=0.0,
-            rows_shuffled=n_edges + g.num_vertices,
-            wall_s=time.monotonic() - t0))
-    ew.unpersist()
-    base.unpersist()
-    return IterativeResult(df=ranks, iterations=num_iters, metrics=metrics)
+        return new, 0.0, 0.0, n_edges + g.num_vertices, {}
 
+    ranks = base.select("id", F.col("p").alias("rank")) \
+        .localCheckpoint(eager=True)
+    return iterate("trust_rank", ranks, step, save=lambda r: r,
+                   max_iters=num_iters, tol=None, release=(ew, base))
+
+
+# --------------------------------------------------------- BFS distances
+
+def seed_frame(spark, ids: list[int]) -> DataFrame:
+    """The distinct ``ids`` as an (id long) local relation."""
+    return local_df(spark, [(s,) for s in sorted({int(s) for s in ids})],
+                    "id long")
+
+
+def bfs_distances(g: Graph, sources: list[int],
+                  directed: bool = True,
+                  max_depth: int = 200) -> IterativeResult:
+    """Multi-source BFS hop distances (semi-naive frontier expansion).
+
+    Returns (id, dist) for REACHED vertices only — dist = minimum hop count
+    from any source. ``directed=False`` walks the undirected view. The
+    frontier pattern is the prism activation loop (Prism.hs:299-317): each
+    round joins only last round's newly-reached set to the edge table, so
+    every edge is expanded at most once per endpoint discovery.
+    """
+    if not sources:
+        raise ValueError("bfs_distances needs at least one source")
+    return bfs_distances_from(g, seed_frame(g.spark, sources),
+                              directed=directed, max_depth=max_depth)
+
+
+def bfs_distances_from(g: Graph, seeds: DataFrame,
+                       directed: bool = True,
+                       max_depth: int = 200) -> IterativeResult:
+    """`bfs_distances` seeded from a DataFrame (id) instead of a driver-side
+    list — the scale path: a seed set of any size (e.g. a whole SCC in
+    bowtie) stays distributed, never a collect or an ``isin`` plan literal.
+    """
+    return bfs_levels(g, seeds, directed=directed, max_depth=max_depth)
+
+
+def bfs_levels(g: Graph, seeds: DataFrame, directed: bool = True,
+               max_depth: int = 200,
+               per_source: bool = False) -> IterativeResult:
+    """The one multi-source BFS behind bfs_distances, bowtie, harmonic and
+    closeness centrality. With ``per_source`` each seed runs its own BFS:
+    rows are keyed by (lm, id) with lm the seed — |landmarks| searches in
+    one DataFrame, one job per level — and the result is (lm, id, dist);
+    otherwise all seeds share one frontier keyed by id, and the result is
+    (id, dist). Reached vertices only. Self-loops never reach a new vertex,
+    so the edge set drops them.
+
+    ``iterations`` is the last depth that reached a vertex: the round that
+    reaches nothing only confirms the fixpoint.
+    """
+    shuffle_p = _shuffle_partitions(g)
+    e = g.edges.where(F.col("src") != F.col("dst")) \
+        .dropDuplicates(["src", "dst"])
+    if not directed:
+        e = e.unionAll(invert(e)).dropDuplicates(["src", "dst"])
+    e = e.repartition(shuffle_p, "src").persist()
+    e.count()
+
+    lm = ["lm"] if per_source else []
+    keys = [*lm, "id"]
+    dist = (
+        g.vertices().join(seeds.select("id"), "id", "left_semi")
+        .select(*[F.col("id").alias(c) for c in keys],
+                F.lit(0).cast("long").alias("dist"))
+        .repartition(shuffle_p, *keys)
+        .localCheckpoint(eager=True)
+    )
+
+    def step(state):
+        dist, frontier, depth = state
+        reached = (
+            e.join(frontier.withColumnRenamed("id", "src"), "src")
+            .select(*lm, F.col("dst").alias("id"))
+            .dropDuplicates(keys)
+            .join(dist.select(*keys), keys, "left_anti")
+            .select(*keys, F.lit(depth + 1).cast("long").alias("dist"))
+            .localCheckpoint(eager=True)
+        )
+        n_new = reached.count()
+        if n_new:
+            dist = dist.unionByName(reached).localCheckpoint(eager=True)
+        return ((dist, reached, depth + 1), float(n_new),
+                float(1 if n_new else 0), n_new, {"reached": n_new})
+
+    res = iterate("bfs", (dist, dist, 0), step, save=lambda state: state[0],
+                  max_iters=max_depth, release=(e,))
+    if res.metrics and not res.metrics[-1].extra["reached"]:
+        res.iterations -= 1
+    return res
+
+
+# -------------------------------------------------------------- k-core
+
+def k_core(g: Graph, k: int, max_rounds: int = 1000) -> IterativeResult:
+    """The k-core of the undirected simple graph: the maximal subgraph in
+    which every vertex has degree >= k. Iterative peeling — repeatedly drop
+    vertices with within-subgraph degree < k until stable; raises
+    RuntimeError if ``max_rounds`` peels leave it unstable.
+
+    Returns (id, deg): surviving vertices with their degree INSIDE the core
+    (the output is empty when no k-core exists). Deterministic; the
+    fixpoint is independent of peel order, so the DuckDB twin is the same
+    peel unrolled.
+    """
+    und = (
+        g.edges.unionAll(invert(g.edges))
+        .dropDuplicates(["src", "dst"])
+        .repartition(_shuffle_partitions(g), "src")
+        .persist()
+    )
+    und.count()
+
+    def degrees(alive):
+        """In-subgraph degree of every vertex of ``alive`` with one."""
+        return (
+            und.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
+            .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            .groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).alias("deg"))
+        )
+
+    def step(state):
+        alive, n_alive = state
+        new = degrees(alive).where(F.col("deg") >= k).select("id") \
+            .localCheckpoint(eager=True)
+        n_new = new.count()
+        # an emptied vertex set is a fixpoint too: there is no k-core
+        return ((new, n_new), float(n_alive - n_new),
+                float(0 < n_new < n_alive), n_alive,
+                {"peeled": n_alive - n_new})
+
+    # survivors start as every endpoint (isolated vertices have degree 0 —
+    # never in a k-core for k >= 1)
+    alive = (
+        und.select(F.col("src").alias("id")).dropDuplicates()
+        .localCheckpoint(eager=True)
+    )
+    return iterate("k_core", (alive, alive.count()), step,
+                   save=lambda state: degrees(state[0]),
+                   max_iters=max_rounds, must_converge=True, release=(und,))
+
+
+# ------------------------------------------------------------------ SALSA
 
 def salsa(g: Graph, num_iters: int = 10) -> IterativeResult:
     """SALSA (Lempel-Moran 2000): hub/authority scores as stationary
@@ -401,30 +363,22 @@ def salsa(g: Graph, num_iters: int = 10) -> IterativeResult:
         h(i)  = sum over i->k of a(k) / indeg(k)
         a'(j) = sum over i->j of h(i) / outdeg(i)
 
-    Init: a uniform over vertices with in-edges. Deterministic fixed-sweep.
-    Returns (id, hub, authority) over the dense vertex space.
+    Init: a uniform over vertices with in-edges, h = 0. Deterministic
+    fixed-sweep. Returns (id, hub, authority) over the dense vertex space.
     """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     e = g.edges.where(F.col("src") != F.col("dst")) \
         .dropDuplicates(["src", "dst"])
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
     ew = (
         e.join(outdeg, "src").join(indeg, "dst")
-        .repartition(shuffle_p, "src")
+        .repartition(_shuffle_partitions(g), "src")
         .persist()
     )
     n_edges = ew.count()
 
-    auths = indeg.select(F.col("dst").alias("id"))
-    n_auth = auths.count()
-    a = auths.select("id", F.lit(1.0 / max(n_auth, 1)).alias("score")) \
-        .localCheckpoint(eager=True)
-    h = None
-    metrics: list[IterationMetrics] = []
-    for it in range(1, num_iters + 1):
-        t0 = time.monotonic()
+    def step(scores):
+        _, a = scores
         h = (
             ew.join(a.withColumnRenamed("id", "dst")
                     .withColumnRenamed("score", "a"), "dst")
@@ -439,18 +393,24 @@ def salsa(g: Graph, num_iters: int = 10) -> IterativeResult:
             .agg(F.sum(F.col("h") / F.col("outdeg")).alias("score"))
             .localCheckpoint(eager=True)
         )
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=0.0, linf_residual=0.0,
-            rows_shuffled=2 * n_edges, wall_s=time.monotonic() - t0))
-    out = (
-        g.vertices()
-        .join(h.withColumnRenamed("score", "hub"), "id", "left")
-        .join(a.withColumnRenamed("score", "authority"), "id", "left")
-        .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub"),
-                F.coalesce("authority", F.lit(0.0)).alias("authority"))
-    )
-    ew.unpersist()
-    return IterativeResult(df=out, iterations=num_iters, metrics=metrics)
+        return (h, a), 0.0, 0.0, 2 * n_edges, {}
+
+    def save(scores):
+        h, a = scores
+        return (
+            g.vertices()
+            .join(h.withColumnRenamed("score", "hub"), "id", "left")
+            .join(a.withColumnRenamed("score", "authority"), "id", "left")
+            .select("id", F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                    F.coalesce("authority", F.lit(0.0)).alias("authority"))
+        )
+
+    auths = indeg.select(F.col("dst").alias("id"))
+    n_auth = auths.count()
+    a = auths.select("id", F.lit(1.0 / max(n_auth, 1)).alias("score")) \
+        .localCheckpoint(eager=True)
+    return iterate("salsa", (a.select("id", F.lit(0.0).alias("score")), a),
+                   step, save, max_iters=num_iters, tol=None, release=(ew,))
 
 
 # ------------------------------------------------------------------- Katz
@@ -469,40 +429,26 @@ def katz(g: Graph, alpha: float = 0.02, beta: float = 1.0,
     deduped once, hash-partitioned by src, persisted; each sweep shuffles
     the |V|-row score vector with map-side partial sums.
     """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = (
-        g.edges.where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(shuffle_p, "src")
-        .persist()
-    )
-    n_edges = edges.count()
-    verts = g.vertices().repartition(shuffle_p, "id").persist()
+    edges, n_edges, verts = _simple_edges(g, drop_self_loops=True)
 
-    x = verts.select("id", F.lit(float(beta)).alias("score"))
-    metrics: list[IterationMetrics] = []
-    for it in range(1, num_iters + 1):
-        t0 = time.monotonic()
+    def step(x):
         msgs = (
             edges.join(x.withColumnRenamed("id", "src"), "src")
             .groupBy(F.col("dst").alias("id"))
             .agg(F.sum("score").alias("msg"))
         )
-        x = (
+        new = (
             verts.join(msgs, "id", "left")
             .select("id", (F.lit(float(beta)) + F.lit(float(alpha))
                            * F.coalesce("msg", F.lit(0.0))).alias("score"))
             .localCheckpoint(eager=True)
         )
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=0.0, linf_residual=0.0,
-            rows_shuffled=n_edges + g.num_vertices,
-            wall_s=time.monotonic() - t0))
-    out = x.select("id", F.col("score").alias("katz"))
-    edges.unpersist()
-    verts.unpersist()
-    return IterativeResult(df=out, iterations=num_iters, metrics=metrics)
+        return new, 0.0, 0.0, n_edges + g.num_vertices, {}
+
+    return iterate(
+        "katz", verts.select("id", F.lit(float(beta)).alias("score")), step,
+        save=lambda x: x.select("id", F.col("score").alias("katz")),
+        max_iters=num_iters, tol=None, release=(edges, verts))
 
 
 # ------------------------------------------------- eigenvector centrality
@@ -518,28 +464,15 @@ def eigenvector_centrality(g: Graph, num_iters: int = 20) -> IterativeResult:
     Reuses the HITS gather+normalize kernel: one join-agg per sweep, the
     norm folded in as a broadcast 1-row scalar.
     """
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    edges = (
-        g.edges.where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-        .repartition(shuffle_p, "src")
-        .persist()
-    )
-    n_edges = edges.count()
-    verts = g.vertices().repartition(shuffle_p, "id").persist()
+    edges, n_edges, verts = _simple_edges(g, drop_self_loops=True)
 
-    x = verts.select("id", F.lit(1.0).alias("score"))
-    metrics: list[IterationMetrics] = []
-    for it in range(1, num_iters + 1):
-        t0 = time.monotonic()
-        x = _gather_normalize(edges, verts, x, out_key="dst", in_key="src")
-        x = x.localCheckpoint(eager=True)
-        metrics.append(IterationMetrics(
-            iteration=it, l1_residual=0.0, linf_residual=0.0,
-            rows_shuffled=n_edges + g.num_vertices,
-            wall_s=time.monotonic() - t0))
-    out = x.select("id", F.col("score").alias("eigenvector"))
-    edges.unpersist()
-    verts.unpersist()
-    return IterativeResult(df=out, iterations=num_iters, metrics=metrics)
+    def step(x):
+        new = _gather_normalize(edges, verts, x, out_key="dst",
+                                in_key="src").localCheckpoint(eager=True)
+        return new, 0.0, 0.0, n_edges + g.num_vertices, {}
+
+    return iterate(
+        "eigenvector_centrality",
+        verts.select("id", F.lit(1.0).alias("score")), step,
+        save=lambda x: x.select("id", F.col("score").alias("eigenvector")),
+        max_iters=num_iters, tol=None, release=(edges, verts))

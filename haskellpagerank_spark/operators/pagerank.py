@@ -185,8 +185,8 @@ def run_pagerank(g: Graph, cfg: PageRankConfig | None = None,
     def step(ranks):
         # lazy: the residual aggregation materializes + caches it,
         # truncating lineage without an extra job
-        new_ranks = _superstep(ew, base, ranks, d, dconst, n_total, cfg) \
-            .localCheckpoint(eager=False)
+        new_ranks = _superstep(ew, base, ranks, d, dconst, n_total,
+                               cfg.sink_mode).localCheckpoint(eager=False)
         return (new_ranks, *rank_residual(new_ranks, ranks),
                 n_edges + 2 * n_total, {})
 
@@ -200,7 +200,7 @@ def run_pagerank(g: Graph, cfg: PageRankConfig | None = None,
 
 def _superstep(ew: DataFrame, base: DataFrame, ranks: DataFrame,
                d: float, dconst: float, n_total: int,
-               cfg: PageRankConfig) -> DataFrame:
+               sink_mode: str) -> DataFrame:
     """One power-iteration sweep as a join + partial-agg + final-agg plan."""
     msgs = (
         ew.join(ranks.withColumnRenamed("id", "src"), "src")
@@ -210,7 +210,7 @@ def _superstep(ew: DataFrame, base: DataFrame, ranks: DataFrame,
     joined = base.join(msgs, "id", "left").select(
         "id", "has_out", F.coalesce("msg", F.lit(0.0)).alias("msg")
     )
-    if cfg.sink_mode == "redistribute":
+    if sink_mode == "redistribute":
         # dangling mass of the PREVIOUS iterate, redistributed uniformly —
         # folded into the plan as a broadcast 1-row scalar so the whole
         # superstep (join + agg + dangling + blend) is a single job
@@ -252,50 +252,36 @@ def run_pagerank_weighted_table(edges: DataFrame,
 
     The host-rank composition: roll the url graph up to hosts (weight =
     link count), then rank hosts — the standard web-scale move before
-    per-url analytics. Same superstep plan shape as run_pagerank
-    (|V|-row rank shuffle per sweep against a persisted normalized edge
-    table)."""
+    per-url analytics. Each sweep is run_pagerank's redistribute
+    ``_superstep`` over the normalized edge table, which stays in its
+    join-produced layout (no repartition)."""
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst"),
         F.col(weight_col).cast("double").alias("w"),
     ).where(F.col("src") != F.col("dst"))
     out_w = e.groupBy("src").agg(F.sum("w").alias("ow"))
     wn = e.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("ow")).alias("wn")).persist()
-    wn.count()
+        "src", "dst", (F.col("w") / F.col("ow")).alias("w")).persist()
+    n_edges = wn.count()
     verts = (
-        e.select(F.col("src").alias("vertex"))
-        .unionAll(e.select(F.col("dst").alias("vertex")))
+        e.select(F.col("src").alias("id"))
+        .unionAll(e.select(F.col("dst").alias("id")))
         .dropDuplicates()
-        .join(out_w.select(F.col("src").alias("vertex"),
-                           F.lit(True).alias("has_out")), "vertex", "left")
-        .select("vertex", F.coalesce("has_out", F.lit(False)).alias("has_out"))
+        .join(out_w.select(F.col("src").alias("id"),
+                           F.lit(True).alias("has_out")), "id", "left")
+        .select("id", F.coalesce("has_out", F.lit(False)).alias("has_out"))
         .persist()
     )
     n = verts.count()
-    d = damping
-    ranks = verts.select("vertex", F.lit(1.0 / n).alias("rank")) \
-        .localCheckpoint(eager=True)
-    for _ in range(num_iters):
-        msgs = (
-            wn.join(ranks.withColumnRenamed("vertex", "src"), "src")
-            .groupBy(F.col("dst").alias("vertex"))
-            .agg(F.sum(F.col("wn") * F.col("rank")).alias("msg"))
-        )
-        dangling = (
-            ranks.join(verts.where(~F.col("has_out")), "vertex")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang"))
-        )
-        ranks = (
-            verts.join(msgs, "vertex", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "vertex",
-                (F.lit((1.0 - d) / n)
-                 + F.lit(d) * (F.coalesce("msg", F.lit(0.0))
-                               + F.col("_dang") / n)).alias("rank"))
+
+    def step(ranks):
+        new = _superstep(wn, verts, ranks, damping, 0.0, n, "redistribute") \
             .localCheckpoint(eager=True)
-        )
-    wn.unpersist()
-    verts.unpersist()
-    return ranks
+        return new, 0.0, 0.0, n_edges + 2 * n, {}
+
+    ranks = verts.select("id", F.lit(1.0 / n).alias("rank")) \
+        .localCheckpoint(eager=True)
+    return iterate(
+        "pagerank_weighted_table", ranks, step,
+        save=lambda ranks: ranks.withColumnRenamed("id", "vertex"),
+        max_iters=num_iters, tol=None, release=(wn, verts)).df

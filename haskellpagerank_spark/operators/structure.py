@@ -45,8 +45,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans.checkpoint import IterationMetrics
-from ..plans.fixpoint import IterativeResult
+from ..plans.fixpoint import IterativeResult, iterate
 from ..session import local_df
+from .centrality import bfs_distances_from, bfs_levels, seed_frame
 from .graph import Graph, invert, undirected_simple_edges
 from .triangles import triangles_per_vertex
 
@@ -295,8 +296,6 @@ def bowtie(g: Graph, scc_labels: DataFrame | None = None) -> IterativeResult:
     OTHER = everything else (tendrils, tubes, disconnected). Reachability =
     two multi-source BFS passes seeded with the whole CORE.
     """
-    from .centrality import bfs_distances_from
-
     res_scc = None
     if scc_labels is None:
         res_scc = strongly_connected_components_auto(g)
@@ -412,57 +411,6 @@ def sssp(g: Graph, weighted_edges: DataFrame, sources: list[int],
 
 # ------------------------------------------------------ harmonic centrality
 
-def _landmark_distances(g: Graph, landmarks: list[int], directed: bool,
-                        max_depth: int):
-    """Shared multi-landmark BFS: returns (dist_df(lm, id, d), metrics,
-    depth). Used by harmonic_centrality and closeness_centrality."""
-    spark = g.spark
-    shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    e = g.edges.where(F.col("src") != F.col("dst")) \
-        .dropDuplicates(["src", "dst"])
-    if not directed:
-        e = e.unionAll(invert(e)).dropDuplicates(["src", "dst"])
-    e = e.repartition(shuffle_p, "src").persist()
-    e.count()
-
-    lm_set = sorted({int(s) for s in landmarks})
-    lm_df = local_df(spark, [(s,) for s in lm_set], "id long")
-    dist = (
-        g.vertices().join(lm_df, "id", "left_semi")
-        .select(F.col("id").alias("lm"), "id",
-                F.lit(0).cast("long").alias("d"))
-        .repartition(shuffle_p, "lm", "id")
-        .localCheckpoint(eager=True)
-    )
-    frontier = dist
-    metrics: list[IterationMetrics] = []
-    depth = 0
-    while depth < max_depth:
-        depth += 1
-        t0 = time.monotonic()
-        reached = (
-            e.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select("lm", F.col("dst").alias("id"))
-            .dropDuplicates(["lm", "id"])
-            .join(dist.select("lm", "id"), ["lm", "id"], "left_anti")
-            .select("lm", "id", F.lit(depth).cast("long").alias("d"))
-            .localCheckpoint(eager=True)
-        )
-        n_new = reached.count()
-        metrics.append(IterationMetrics(
-            iteration=depth, l1_residual=float(n_new),
-            linf_residual=float(1 if n_new else 0),
-            rows_shuffled=n_new, wall_s=time.monotonic() - t0,
-            extra={"reached": n_new}))
-        if n_new == 0:
-            depth -= 1
-            break
-        dist = dist.unionByName(reached).localCheckpoint(eager=True)
-        frontier = reached
-    e.unpersist()
-    return dist, metrics, depth
-
-
 def harmonic_centrality(g: Graph, landmarks: list[int],
                         directed: bool = True,
                         max_depth: int = 200) -> IterativeResult:
@@ -475,19 +423,20 @@ def harmonic_centrality(g: Graph, landmarks: list[int],
     """
     if not landmarks:
         raise ValueError("harmonic_centrality needs at least one landmark")
-    dist, metrics, depth = _landmark_distances(g, landmarks, directed,
-                                               max_depth)
+    res = bfs_levels(g, seed_frame(g.spark, landmarks), directed=directed,
+                     max_depth=max_depth, per_source=True)
     h = (
-        dist.where(F.col("d") > 0)
+        res.df.where(F.col("dist") > 0)
         .groupBy("id")
-        .agg(F.sum(1.0 / F.col("d")).alias("harmonic"))
+        .agg(F.sum(1.0 / F.col("dist")).alias("harmonic"))
     )
     out = (
         g.vertices()
         .join(h, "id", "left")
         .select("id", F.coalesce("harmonic", F.lit(0.0)).alias("harmonic"))
     )
-    return IterativeResult(df=out, iterations=depth, metrics=metrics)
+    return IterativeResult(df=out, iterations=res.iterations,
+                           metrics=res.metrics)
 
 
 def harmonic_sampled(g: Graph, keep_num: int = 2, keep_den: int = 5,
@@ -1096,7 +1045,6 @@ def trussness(g: Graph, max_rounds: int = 1000) -> IterativeResult:
 
     Returns (src, dst, trussness) over canonical (src < dst) simple edges.
     """
-    from pyspark.sql.window import Window
     spark = g.spark
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     canon = (
@@ -1124,14 +1072,8 @@ def trussness(g: Graph, max_rounds: int = 1000) -> IterativeResult:
     labels = (canon.join(sup, ["src", "dst"], "left")
               .select("src", "dst", F.coalesce("t", F.lit(0)).alias("t"))
               .localCheckpoint(eager=True))
-    wcum = (Window.partitionBy("src", "dst").orderBy(F.col("m").desc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    metrics: list[IterationMetrics] = []
-    rounds = 0
-    converged = False
-    while rounds < max_rounds:
-        rounds += 1
-        t0 = time.monotonic()
+
+    def step(labels):
         m = (
             inc.join(labels.select(F.col("src").alias("o1s"),
                                    F.col("dst").alias("o1d"),
@@ -1139,39 +1081,15 @@ def trussness(g: Graph, max_rounds: int = 1000) -> IterativeResult:
             .join(labels.select(F.col("src").alias("o2s"),
                                 F.col("dst").alias("o2d"),
                                 F.col("t").alias("t2")), ["o2s", "o2d"])
-            .select("src", "dst", F.least("t1", "t2").alias("m"))
+            .select("src", "dst", F.least("t1", "t2").alias("v"))
         )
-        hist = m.groupBy("src", "dst", "m").agg(
-            F.count(F.lit(1)).alias("cnt"))
-        h = (hist.withColumn("cum", F.sum("cnt").over(wcum))
-             .groupBy("src", "dst")
-             .agg(F.max(F.least(F.col("m"), F.col("cum"))).alias("h")))
-        new_labels = (
-            labels.join(h, ["src", "dst"], "left")
-            .select("src", "dst",
-                    F.least(F.col("t"),
-                            F.coalesce("h", F.lit(0))).alias("t"),
-                    (F.coalesce("h", F.lit(0)) < F.col("t"))
-                    .alias("_changed"))
-            .localCheckpoint(eager=True)
-        )
-        n_changed = new_labels.where("_changed").count()
-        labels = new_labels.select("src", "dst", "t")
-        metrics.append(IterationMetrics(
-            iteration=rounds, l1_residual=float(n_changed),
-            linf_residual=float(1 if n_changed else 0),
-            rows_shuffled=n_inc, wall_s=time.monotonic() - t0,
-            extra={"changed": n_changed}))
-        if n_changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"trussness h-index fixpoint not reached in {max_rounds} rounds")
-    return IterativeResult(
-        df=labels.select("src", "dst",
-                         (F.col("t") + F.lit(2)).alias("trussness")),
-        iterations=rounds, metrics=metrics)
+        return _h_index_sweep(labels, m, ("src", "dst"), "t", n_inc)
+
+    return iterate(
+        "trussness", labels, step,
+        save=lambda labels: labels.select(
+            "src", "dst", (F.col("t") + F.lit(2)).alias("trussness")),
+        max_iters=max_rounds, must_converge=True)
 
 
 def trussness_local(g: Graph) -> IterativeResult:
@@ -1299,11 +1217,11 @@ def closeness_centrality(g: Graph, landmarks: list[int],
     harmonic_centrality — only the final aggregate differs."""
     if not landmarks:
         raise ValueError("closeness_centrality needs at least one landmark")
-    dist, metrics, depth = _landmark_distances(g, landmarks, directed,
-                                               max_depth)
+    res = bfs_levels(g, seed_frame(g.spark, landmarks), directed=directed,
+                     max_depth=max_depth, per_source=True)
     c = (
-        dist.groupBy("id")
-        .agg(F.count(F.lit(1)).alias("r"), F.sum("d").alias("s"))
+        res.df.groupBy("id")
+        .agg(F.count(F.lit(1)).alias("r"), F.sum("dist").alias("s"))
         .select("id",
                 F.when(F.col("s") > 0,
                        (F.col("r") - 1) / F.col("s"))
@@ -1314,7 +1232,8 @@ def closeness_centrality(g: Graph, landmarks: list[int],
         .select("id",
                 F.coalesce("closeness", F.lit(0.0)).alias("closeness"))
     )
-    return IterativeResult(df=out, iterations=depth, metrics=metrics)
+    return IterativeResult(df=out, iterations=res.iterations,
+                           metrics=res.metrics)
 
 
 def jaccard_neighbors(g: Graph, min_common: int = 1,
@@ -1414,7 +1333,6 @@ def coreness(g: Graph, max_rounds: int = 1000) -> IterativeResult:
     ``max_rounds`` (cannot happen for max_rounds >= |V|: each
     non-converged round decreases some c by >= 1).
     """
-    from pyspark.sql.window import Window
     spark = g.spark
     shuffle_p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     und = undirected_simple_edges(g).repartition(shuffle_p, "src").persist()
@@ -1425,63 +1343,64 @@ def coreness(g: Graph, max_rounds: int = 1000) -> IterativeResult:
     labels = (verts.join(deg, "id", "left")
               .select("id", F.coalesce("c", F.lit(0)).alias("c"))
               .localCheckpoint(eager=True))
-    metrics: list[IterationMetrics] = []
-    rounds = 0
-    converged = False
-    # Suffix-count window over the per-vertex HISTOGRAM of neighbor c
-    # values (<= distinct-c rows per id), not over raw neighbor rows: a
-    # 1e7-in-degree web hub would otherwise put 1e7 rows into one window
-    # task per round — the classic skew bottleneck. The h-index over the
-    # histogram is max over distinct values v of min(v, count_ge(v)),
-    # which equals max over sorted neighbor rows of min(row_number, c):
-    # both reach their maximum at the last row of each value group, where
-    # row_number = the suffix count.
-    wcum = (Window.partitionBy("id").orderBy(F.col("cn").desc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+
     # NOTE on semi-naive: restricting recompute to neighbors-of-changed
     # was measured 3x SLOWER here (101s vs 31s on the 423k-edge pages
     # graph) — the frontier only collapses in the last few rounds while
     # every earlier round pays two extra |E|-scale joins. Full recompute
     # per round is the right plan for this operator.
-    while rounds < max_rounds:
-        rounds += 1
-        t0 = time.monotonic()
+    def step(labels):
         nbr = (
             und.join(labels.select(F.col("id").alias("dst"),
-                                   F.col("c").alias("cn")), "dst")
-            .select(F.col("src").alias("id"), "cn")
+                                   F.col("c").alias("v")), "dst")
+            .select(F.col("src").alias("id"), "v")
         )
-        hist = nbr.groupBy("id", "cn").agg(F.count(F.lit(1)).alias("cnt"))
-        h = (hist.withColumn("cum", F.sum("cnt").over(wcum))
-             .groupBy("id")
-             .agg(F.max(F.least(F.col("cn"), F.col("cum"))).alias("h")))
-        new_labels = (
-            labels.join(h, "id", "left")
-            .select("id", F.least(F.col("c"),
-                                  F.coalesce("h", F.lit(0))).alias("c"),
-                    (F.coalesce("h", F.lit(0)) < F.col("c"))
-                    .alias("_changed"))
-            .localCheckpoint(eager=True)
-        )
-        n_changed = new_labels.where("_changed").count()
-        labels = new_labels.select("id", "c")
-        metrics.append(IterationMetrics(
-            iteration=rounds, l1_residual=float(n_changed),
-            linf_residual=float(1 if n_changed else 0),
-            rows_shuffled=n_und + g.num_vertices,
-            wall_s=time.monotonic() - t0,
-            extra={"changed": n_changed}))
-        if n_changed == 0:
-            converged = True
-            break
-    und.unpersist()
-    verts.unpersist()
-    if not converged:
-        raise RuntimeError(
-            f"coreness h-index fixpoint not reached in {max_rounds} rounds")
-    return IterativeResult(
-        df=labels.select("id", F.col("c").alias("coreness")),
-        iterations=rounds, metrics=metrics)
+        return _h_index_sweep(labels, nbr, ("id",), "c",
+                              n_und + g.num_vertices)
+
+    return iterate(
+        "coreness", labels, step,
+        save=lambda labels: labels.select(
+            "id", F.col("c").alias("coreness")),
+        max_iters=max_rounds, must_converge=True, release=(und, verts))
+
+
+def _h_index_sweep(labels: DataFrame, nbr: DataFrame, keys: tuple[str, ...],
+                   col: str, rows_shuffled: int):
+    """One h-index sweep, the step of coreness (keys ``("id",)``) and
+    trussness (keys ``("src", "dst")``): each key's value ``col`` in
+    ``labels`` becomes min(value, h-index of its neighbour values ``v`` in
+    ``nbr``). Returns the fixpoint driver's step tuple; the residual is
+    the number of changed keys.
+
+    The suffix-count window runs over the per-key HISTOGRAM of neighbour
+    values (<= distinct-v rows per key), not over raw neighbour rows: a
+    1e7-in-degree web hub would otherwise put 1e7 rows into one window
+    task per round — the classic skew bottleneck. The h-index over the
+    histogram is max over distinct values v of min(v, count_ge(v)), which
+    equals max over sorted neighbour rows of min(row_number, v): both reach
+    their maximum at the last row of each value group, where row_number =
+    the suffix count.
+    """
+    from pyspark.sql.window import Window
+    keys = list(keys)
+    wcum = (Window.partitionBy(*keys).orderBy(F.col("v").desc())
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    hist = nbr.groupBy(*keys, "v").agg(F.count(F.lit(1)).alias("cnt"))
+    h = (hist.withColumn("cum", F.sum("cnt").over(wcum))
+         .groupBy(*keys)
+         .agg(F.max(F.least(F.col("v"), F.col("cum"))).alias("h")))
+    new = (
+        labels.join(h, keys, "left")
+        .select(*keys, F.least(F.col(col), F.coalesce("h", F.lit(0)))
+                .alias(col),
+                (F.coalesce("h", F.lit(0)) < F.col(col)).alias("_changed"))
+        .localCheckpoint(eager=True)
+    )
+    n_changed = new.where("_changed").count()
+    return (new.select(*keys, col), float(n_changed),
+            float(1 if n_changed else 0), rows_shuffled,
+            {"changed": n_changed})
 
 
 def _coreness_local_arrays(s, d, n):

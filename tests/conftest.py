@@ -1,5 +1,7 @@
 import pytest
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
+from haskellpagerank_spark.plans.checkpoint import CheckpointManager
 from haskellpagerank_spark.session import get_spark
 
 
@@ -7,3 +9,45 @@ from haskellpagerank_spark.session import get_spark
 def spark():
     # small local session: tests verify semantics, not throughput
     return get_spark(app_name="hpr-tests", cores=4, shuffle_partitions=4)
+
+
+@pytest.fixture
+def released(spark, monkeypatch):
+    """``released(rdds)`` asserts that every frame passed to
+    ``DataFrame.persist`` so far ends uncached and, with ``rdds``, that the
+    session's persisted RDDs gained no id. The DataFrame tiers' per-sweep
+    localCheckpoint RDDs stay registered until the JVM collects them, so
+    only the tiers that sweep a cached RDD compare ids."""
+    jsc = spark.sparkContext._jsc
+    persisted = []
+    persist = ClassicDataFrame.persist
+
+    def spy(self, *args, **kwargs):
+        persisted.append(self)
+        return persist(self, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "persist", spy)
+    before = set(jsc.getPersistentRDDs().keys())
+
+    def check(rdds: bool) -> None:
+        assert not [df for df in persisted if df.is_cached]
+        if rdds:
+            assert set(jsc.getPersistentRDDs().keys()) <= before
+
+    return check
+
+
+@pytest.fixture
+def fail_second_write(monkeypatch):
+    """Calling it makes the second sweep of every later run raise: the
+    fixpoint driver calls ``CheckpointManager.write`` once per sweep, with
+    or without a ``checkpoint_dir``."""
+    write = CheckpointManager.write
+
+    def failing_write(self, state, metrics, snapshot=None):
+        if metrics.iteration == 2:
+            raise OSError("injected snapshot failure")
+        return write(self, state, metrics, snapshot)
+
+    return lambda: monkeypatch.setattr(CheckpointManager, "write",
+                                       failing_write)

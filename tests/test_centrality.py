@@ -6,13 +6,21 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
 from haskellpagerank_spark import oracle
 from haskellpagerank_spark.fixtures import FIXTURE_EDGES
 from haskellpagerank_spark.operators.centrality import (
-    bfs_distances, hits, k_core, personalized_pagerank,
+    bfs_distances, eigenvector_centrality, hits, k_core, katz,
+    personalized_pagerank, salsa, seed_frame, trust_rank,
 )
 from haskellpagerank_spark.operators.graph import from_pairs
+from haskellpagerank_spark.operators.pagerank import (
+    run_pagerank_weighted_table,
+)
+from haskellpagerank_spark.operators.structure import (
+    coreness, harmonic_centrality, trussness,
+)
 
 # skip the empty/trivial fixtures where centralities are degenerate
 FIXTURES = sorted(n for n, e in FIXTURE_EDGES.items() if len(e) >= 4)
@@ -26,14 +34,16 @@ def _arrays(name):
 def test_hits_matches_oracle(spark, name):
     src, dst, n = _arrays(name)
     g = from_pairs(spark, FIXTURE_EDGES[name])
-    res = hits(g, num_iters=10)
-    rows = {r["id"]: (r["hub"], r["authority"]) for r in res.df.collect()}
-    hub, auth = oracle.hits(src, dst, n, num_iters=10)
-    assert set(rows) == set(range(n))
-    got_hub = np.array([rows[i][0] for i in range(n)])
-    got_auth = np.array([rows[i][1] for i in range(n)])
-    np.testing.assert_allclose(got_hub, hub, atol=1e-9)
-    np.testing.assert_allclose(got_auth, auth, atol=1e-9)
+    for num_iters in (10, 0):
+        res = hits(g, num_iters=num_iters)
+        rows = {r["id"]: (r["hub"], r["authority"])
+                for r in res.df.collect()}
+        hub, auth = oracle.hits(src, dst, n, num_iters=num_iters)
+        assert set(rows) == set(range(n))
+        got_hub = np.array([rows[i][0] for i in range(n)])
+        got_auth = np.array([rows[i][1] for i in range(n)])
+        np.testing.assert_allclose(got_hub, hub, atol=1e-9)
+        np.testing.assert_allclose(got_auth, auth, atol=1e-9)
 
 
 @pytest.mark.parametrize("name", FIXTURES)
@@ -93,26 +103,34 @@ def test_k_core_empty_when_k_too_large(spark):
     g = from_pairs(spark, FIXTURE_EDGES["doubleSquare"])
     res = k_core(g, 100)
     assert res.df.count() == 0
+    assert res.iterations == 1
+
+
+def test_k_core_raises_at_budget(spark):
+    """One peel of a 5-vertex path leaves {1, 2, 3}, not a 2-core: the
+    budget must not pass a partial peel off as the core."""
+    g = from_pairs(spark, [(i, i + 1) for i in range(4)])
+    with pytest.raises(RuntimeError, match="did not converge"):
+        k_core(g, 2, max_rounds=1)
+    assert k_core(g, 2).df.count() == 0
 
 
 @pytest.mark.parametrize("name", FIXTURES)
 def test_trust_rank_matches_oracle(spark, name):
-    from haskellpagerank_spark.operators.centrality import trust_rank
     src, dst, n = _arrays(name)
     g = from_pairs(spark, FIXTURE_EDGES[name])
     weights = {v: 1.0 + v % 3 for v in range(0, n, 2)}
     wdf = g.spark.createDataFrame(
         [(v, w) for v, w in weights.items()], "id long, weight double")
-    res = trust_rank(g, wdf, damping=0.85, num_iters=15)
-    got = {r["id"]: r["rank"] for r in res.df.collect()}
-    want = oracle.trust_rank(src, dst, n, weights, num_iters=15)
-    np.testing.assert_allclose(
-        np.array([got[v] for v in range(n)]), want, atol=1e-12)
+    for num_iters in (15, 0):
+        res = trust_rank(g, wdf, damping=0.85, num_iters=num_iters)
+        got = {r["id"]: r["rank"] for r in res.df.collect()}
+        want = oracle.trust_rank(src, dst, n, weights, num_iters=num_iters)
+        np.testing.assert_allclose(
+            np.array([got[v] for v in range(n)]), want, atol=1e-12)
 
 
 def test_trust_rank_uniform_seeds_equals_ppr(spark):
-    from haskellpagerank_spark.operators.centrality import (
-        personalized_pagerank, trust_rank)
     name = FIXTURES[0]
     g = from_pairs(spark, FIXTURE_EDGES[name])
     src, dst, n = _arrays(name)
@@ -130,20 +148,20 @@ def test_trust_rank_uniform_seeds_equals_ppr(spark):
 
 @pytest.mark.parametrize("name", FIXTURES)
 def test_salsa_matches_oracle(spark, name):
-    from haskellpagerank_spark.operators.centrality import salsa
     src, dst, n = _arrays(name)
     g = from_pairs(spark, FIXTURE_EDGES[name])
-    res = salsa(g, num_iters=8)
-    rows = {r["id"]: (r["hub"], r["authority"]) for r in res.df.collect()}
-    hub, auth = oracle.salsa(src, dst, n, num_iters=8)
-    np.testing.assert_allclose(
-        np.array([rows[v][0] for v in range(n)]), hub, atol=1e-12)
-    np.testing.assert_allclose(
-        np.array([rows[v][1] for v in range(n)]), auth, atol=1e-12)
+    for num_iters in (8, 0):
+        res = salsa(g, num_iters=num_iters)
+        rows = {r["id"]: (r["hub"], r["authority"])
+                for r in res.df.collect()}
+        hub, auth = oracle.salsa(src, dst, n, num_iters=num_iters)
+        np.testing.assert_allclose(
+            np.array([rows[v][0] for v in range(n)]), hub, atol=1e-12)
+        np.testing.assert_allclose(
+            np.array([rows[v][1] for v in range(n)]), auth, atol=1e-12)
 
 
 def test_salsa_mass_conservation(spark):
-    from haskellpagerank_spark.operators.centrality import salsa
     # the walk is stochastic: authority mass stays 1 every sweep
     name = FIXTURES[0]
     g = from_pairs(spark, FIXTURE_EDGES[name])
@@ -154,24 +172,63 @@ def test_salsa_mass_conservation(spark):
 
 @pytest.mark.parametrize("name", FIXTURES)
 def test_katz_matches_oracle(spark, name):
-    from haskellpagerank_spark.operators.centrality import katz
     src, dst, n = _arrays(name)
     g = from_pairs(spark, FIXTURE_EDGES[name])
-    res = katz(g, alpha=0.02, beta=1.0, num_iters=10)
-    rows = {r["id"]: r["katz"] for r in res.df.collect()}
-    want = oracle.katz(src, dst, n, alpha=0.02, beta=1.0, num_iters=10)
-    got = np.array([rows[i] for i in range(n)])
-    np.testing.assert_allclose(got, want, atol=1e-12)
+    for num_iters in (10, 0):
+        res = katz(g, alpha=0.02, beta=1.0, num_iters=num_iters)
+        rows = {r["id"]: r["katz"] for r in res.df.collect()}
+        want = oracle.katz(src, dst, n, alpha=0.02, beta=1.0,
+                           num_iters=num_iters)
+        got = np.array([rows[i] for i in range(n)])
+        np.testing.assert_allclose(got, want, atol=1e-12)
 
 
 @pytest.mark.parametrize("name", FIXTURES)
 def test_eigenvector_matches_oracle(spark, name):
-    from haskellpagerank_spark.operators.centrality import (
-        eigenvector_centrality)
     src, dst, n = _arrays(name)
     g = from_pairs(spark, FIXTURE_EDGES[name])
-    res = eigenvector_centrality(g, num_iters=20)
-    rows = {r["id"]: r["eigenvector"] for r in res.df.collect()}
-    want = oracle.eigenvector_centrality(src, dst, n, num_iters=20)
-    got = np.array([rows[i] for i in range(n)])
-    np.testing.assert_allclose(got, want, atol=1e-9)
+    for num_iters in (20, 0):
+        res = eigenvector_centrality(g, num_iters=num_iters)
+        rows = {r["id"]: r["eigenvector"] for r in res.df.collect()}
+        want = oracle.eigenvector_centrality(src, dst, n,
+                                             num_iters=num_iters)
+        got = np.array([rows[i] for i in range(n)])
+        np.testing.assert_allclose(got, want, atol=1e-9)
+
+
+# a 7-vertex path with a diamond (triangles 0-1-2 and 1-2-3) at its head:
+# every kernel below needs at least two sweeps on it
+PEEL_GRAPH = [(i, i + 1) for i in range(6)] + [(2, 0), (1, 3)]
+
+FAMILY = {
+    "hits": lambda g: hits(g, num_iters=2),
+    "salsa": lambda g: salsa(g, num_iters=2),
+    "katz": lambda g: katz(g, num_iters=2),
+    "eigenvector": lambda g: eigenvector_centrality(g, num_iters=2),
+    "trust_rank": lambda g: trust_rank(
+        g, seed_frame(g.spark, [0, 4]).withColumn("weight", F.lit(2.0)),
+        num_iters=2),
+    "weighted_table": lambda g: run_pagerank_weighted_table(
+        g.edges.withColumn("weight", F.lit(1.0)), num_iters=2),
+    "bfs": lambda g: bfs_distances(g, [0]),
+    "k_core": lambda g: k_core(g, 2),
+    "coreness": coreness,
+    "trussness": trussness,
+    "harmonic": lambda g: harmonic_centrality(g, [0, 3]),
+}
+
+
+@pytest.mark.parametrize("kernel", list(FAMILY))
+def test_family_releases_relations_on_every_exit(
+        spark, released, fail_second_write, kernel):
+    """The centrality, peel and weighted-table kernels release what they
+    persisted after a plain run and after a run whose second sweep
+    raises."""
+    run = FAMILY[kernel]
+    g = from_pairs(spark, PEEL_GRAPH)
+    run(g)
+    released(False)
+    fail_second_write()
+    with pytest.raises(OSError, match="injected"):
+        run(g)
+    released(False)

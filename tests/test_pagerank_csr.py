@@ -6,7 +6,6 @@ in both sink modes, both stopping rules, and under checkpoint/resume.
 
 import numpy as np
 import pytest
-from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from haskellpagerank_spark import oracle as O
 from haskellpagerank_spark.fixtures import FIXTURE_EDGES
@@ -24,7 +23,6 @@ from haskellpagerank_spark.operators.pagerank_csr import (
     run_pagerank_auto, run_pagerank_spmv)
 from haskellpagerank_spark.operators.pagerank_local import run_pagerank_local
 from haskellpagerank_spark.operators.pagerank_pp import run_pagerank_pp
-from haskellpagerank_spark.plans.checkpoint import CheckpointManager
 
 
 def _ranks(res, n):
@@ -86,46 +84,9 @@ TIERS = {"join": run_pagerank, "spmv": run_pagerank_spmv,
          "pp": run_pagerank_pp}
 
 
-@pytest.fixture
-def released(spark, monkeypatch):
-    """``released(rdds)`` asserts that every frame passed to
-    ``DataFrame.persist`` so far ends uncached and, with ``rdds``, that the
-    session's persisted RDDs gained no id. The DataFrame tiers' per-sweep
-    localCheckpoint RDDs stay registered until the JVM collects them, so
-    only the tiers that sweep a cached RDD compare ids."""
-    jsc = spark.sparkContext._jsc
-    persisted = []
-    persist = ClassicDataFrame.persist
-
-    def spy(self, *args, **kwargs):
-        persisted.append(self)
-        return persist(self, *args, **kwargs)
-
-    monkeypatch.setattr(ClassicDataFrame, "persist", spy)
-    before = set(jsc.getPersistentRDDs().keys())
-
-    def check(rdds: bool) -> None:
-        assert not [df for df in persisted if df.is_cached]
-        if rdds:
-            assert set(jsc.getPersistentRDDs().keys()) <= before
-
-    return check
-
-
-def _fail_second_write(monkeypatch):
-    write = CheckpointManager.write
-
-    def failing_write(self, state, metrics, snapshot=None):
-        if metrics.iteration == 2:
-            raise OSError("injected snapshot failure")
-        return write(self, state, metrics, snapshot)
-
-    monkeypatch.setattr(CheckpointManager, "write", failing_write)
-
-
 @pytest.mark.parametrize("tier", list(TIERS))
-def test_releases_relations_on_every_exit(spark, tmp_path, monkeypatch,
-                                          released, tier):
+def test_releases_relations_on_every_exit(spark, tmp_path, released,
+                                          fail_second_write, tier):
     """Every exit path of every PageRank tier releases what the tier
     cached: a fixed-sweep run, a checkpoint resume run to convergence, the
     did-not-converge error and a run whose second sweep raises."""
@@ -143,7 +104,7 @@ def test_releases_relations_on_every_exit(spark, tmp_path, monkeypatch,
         run(g, reference_config(tol=0.0, max_iters=1))
     released(tier == "spmv")
 
-    _fail_second_write(monkeypatch)
+    fail_second_write()
     with pytest.raises(OSError, match="injected"):
         run(g, reference_config(num_iters=2,
                                 checkpoint_dir=str(tmp_path / "ck_fail"),
@@ -167,7 +128,7 @@ CC_TIERS = {
 
 @pytest.mark.parametrize("tier", list(CC_TIERS))
 def test_cc_family_releases_relations_on_every_exit(
-        spark, tmp_path, monkeypatch, released, tier):
+        spark, tmp_path, released, fail_second_write, tier):
     """The same for the CC and LP tiers: a run stopped at its budget, a
     checkpoint resume, a resume at the budget and a run whose second sweep
     raises. Star CC must converge, so its budget run raises instead."""
@@ -188,7 +149,7 @@ def test_cc_family_releases_relations_on_every_exit(
     run(g, max_iters=resumed.iterations, **ck)
     released(tier == "cc_spmv")
 
-    _fail_second_write(monkeypatch)
+    fail_second_write()
     with pytest.raises(OSError, match="injected"):
         run(g, checkpoint_dir=str(tmp_path / "ck_fail"),
             checkpoint_interval=1)
