@@ -376,7 +376,9 @@ def sorted_neighborhood_pairs(docs: DataFrame, text_col: str = "text",
     Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard (same
     n-shingle scorer as the other families, rounded to 6) >= threshold.
     Deterministic: sort key is (key, doc_id), candidates are exactly the
-    rank-distance-<=window pairs.
+    rank-distance-<=window pairs. Docs with a NULL text or a NULL id have
+    no sort key and no identity, so they are dropped before keying: they
+    take no rank and appear in no pair.
 
     Plan shape (100 TB): the global sort rank is NOT a single-task window —
     same two-phase scheme as pack_token_shards, except keyed by the key's
@@ -398,8 +400,10 @@ def sorted_neighborhood_pairs(docs: DataFrame, text_col: str = "text",
     key = F.substring(
         F.lower(F.regexp_replace(F.trim(F.col(text_col)), _WS, " ")),
         1, key_chars)
-    base = docs.select(F.col(id_col).alias("id"), key.alias("key"),
-                       word_shingles(text_col, n).alias("sh"))
+    base = (docs.where(F.col(text_col).isNotNull()
+                       & F.col(id_col).isNotNull())
+            .select(F.col(id_col).alias("id"), key.alias("key"),
+                    word_shingles(text_col, n).alias("sh")))
     keyed = base.select(
         "id", "key", F.substring("key", 1, bucket_chars).alias("_b"))
     totals = sorted(

@@ -149,8 +149,9 @@ def trust_rank(g: Graph, seed_weights: DataFrame,
     """TrustRank / topic-sensitive PageRank: personalized PageRank whose
     teleport distribution is an arbitrary non-negative weight vector
     (id, weight) — e.g. hand-vetted trusted seeds (Gyongyi et al., VLDB
-    2004) or per-page quality scores. Weights are normalized to sum 1;
-    dangling mass returns to the same distribution.
+    2004) or per-page quality scores. The weights of the seeds that are
+    vertices of ``g`` are normalized to sum 1; dangling mass returns to
+    the same distribution.
 
     The teleport vector is a JOINED column, never an `isin` literal — the
     seed table can be |V|-sized (quality-score teleport) without touching
@@ -159,23 +160,23 @@ def trust_rank(g: Graph, seed_weights: DataFrame,
     shuffle_p = _shuffle_partitions(g)
     d = damping
 
-    total = seed_weights.agg(F.sum("weight").alias("t")).first()["t"]
-    if not total or total <= 0:
-        raise ValueError("trust_rank needs positive total seed weight")
-    p = seed_weights.select("id", (F.col("weight") / F.lit(float(total)))
-                            .alias("p"))
-
-    ew = weighted_edges(g).repartition(shuffle_p, "src").persist()
-    n_edges = ew.count()
     base = (
         out_degrees(g)
         .select("id", (F.col("deg") > 0).alias("has_out"))
-        .join(p, "id", "left")
-        .select("id", "has_out", F.coalesce("p", F.lit(0.0)).alias("p"))
+        .join(seed_weights.select("id", "weight"), "id", "left")
+        .select("id", "has_out",
+                F.coalesce("weight", F.lit(0.0)).alias("weight"))
         .repartition(shuffle_p, "id")
         .persist()
     )
-    base.count()
+    # the action that materializes ``base`` also sums its teleport weights
+    total = base.agg(F.sum("weight")).first()[0]
+    if not total or total <= 0:
+        base.unpersist()
+        raise ValueError("trust_rank needs positive total seed weight")
+    p = F.col("weight") / F.lit(float(total))
+    ew = weighted_edges(g).repartition(shuffle_p, "src").persist()
+    n_edges = ew.count()
 
     def step(ranks):
         msgs = (
@@ -193,16 +194,16 @@ def trust_rank(g: Graph, seed_weights: DataFrame,
             .select(
                 "id",
                 (
-                    F.lit(1.0 - d) * F.col("p")
+                    F.lit(1.0 - d) * p
                     + F.lit(d) * (F.coalesce("msg", F.lit(0.0))
-                                  + F.col("_dang") * F.col("p"))
+                                  + F.col("_dang") * p)
                 ).alias("rank"),
             )
             .localCheckpoint(eager=True)
         )
         return new, 0.0, 0.0, n_edges + g.num_vertices, {}
 
-    ranks = base.select("id", F.col("p").alias("rank")) \
+    ranks = base.select("id", p.alias("rank")) \
         .localCheckpoint(eager=True)
     return iterate("trust_rank", ranks, step, save=lambda r: r,
                    max_iters=num_iters, tol=None, release=(ew, base))

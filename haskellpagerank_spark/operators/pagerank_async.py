@@ -124,7 +124,9 @@ def _make_block_kernel(damping: float, dconst: float):
             src_l = np.searchsorted(ids, epdf["src"].to_numpy())
             dst_l = np.searchsorted(ids, epdf["dst"].to_numpy())
             w = epdf["w"].to_numpy().astype(np.float64)
-            eo = np.argsort(dst_l, kind="stable")
+            # (dst, src) order: each vertex sums its in-edges in the same
+            # order whatever order the cogroup delivered them in
+            eo = np.lexsort((src_l, dst_l))
             src_l, dst_l, w = src_l[eo], dst_l[eo], w[eo]
             uniq, first = np.unique(dst_l, return_index=True)
             bound = np.append(first, len(dst_l))

@@ -57,16 +57,6 @@ def dense_power_iterate(g: Graph, cfg: PageRankConfig, outdeg: np.ndarray,
     init = cfg.init_value if cfg.init_value is not None else 1.0 / n
     dconst = (1.0 - d) / n_nonsink if n_nonsink else 0.0
 
-    def to_vec(df: DataFrame, fill: float) -> np.ndarray:
-        pdf = df.select("id", "rank").toPandas()
-        x = np.full(n, fill)
-        x[pdf["id"].to_numpy(np.int64)] = pdf["rank"].to_numpy(np.float64)
-        return x
-
-    def to_df(vec: np.ndarray) -> DataFrame:
-        return spark.createDataFrame(
-            pd.DataFrame({"id": np.arange(n, dtype=np.int64), "rank": vec}))
-
     def step(x: np.ndarray):
         # fold the 1/outdeg weighting into the gathered vector
         y = np.divide(x, outdeg, out=np.zeros(n), where=has_out)
@@ -81,13 +71,18 @@ def dense_power_iterate(g: Graph, cfg: PageRankConfig, outdeg: np.ndarray,
         return (new, float(diff.sum()), float(diff.max()), 0,
                 {"edges_processed": n_edges, "strategy": strategy})
 
-    # warm start: the previous converged state after an ingest batch
-    x = (np.full(n, float(init)) if init_ranks is None
-         else to_vec(init_ranks, float(init)))
+    x = np.full(n, float(init))
+    if init_ranks is not None:
+        # warm start: the previous converged state after an ingest batch
+        pdf = init_ranks.select("id", "rank").toPandas()
+        x[pdf["id"].to_numpy(np.int64)] = pdf["rank"].to_numpy(np.float64)
+    # the driver snapshots and resumes the vector itself (pyarrow, no
+    # Spark job); only the result becomes a DataFrame
     return iterate_ranks(
-        f"pagerank_{strategy}", cfg, x, step,
-        load=lambda df: to_vec(df, 0.0), save=to_df, release=release,
-        return_previous=cfg.return_previous_on_converge)
+        f"pagerank_{strategy}", cfg, x, step, load=lambda x: x,
+        save=lambda x: spark.createDataFrame(pd.DataFrame(
+            {"id": np.arange(n, dtype=np.int64), "rank": x})),
+        release=release, return_previous=cfg.return_previous_on_converge)
 
 
 def run_pagerank_local(g: Graph, cfg: PageRankConfig | None = None,

@@ -12,6 +12,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from .checkpoint import CheckpointManager, IterationMetrics
@@ -38,9 +39,12 @@ def iterate(name: str, state, step, save, *, max_iters: int,
       0`` once its edge fingerprint is unchanged, so they keep ``tol=0``;
       ``tol=None`` runs exactly ``max_iters`` sweeps (fixed-sweep PageRank);
     - ``save(state) -> DataFrame`` for snapshots and the result;
-    - ``load(snapshot_df) -> state`` resumes from the last snapshot in
+    - ``load(snapshot) -> state`` resumes from the last snapshot in
       ``checkpoint_dir`` whose ``columns`` it checks first; without
-      ``load`` the snapshots are only written;
+      ``load`` the snapshots are only written. An ``np.ndarray`` state is
+      snapshotted and resumed on the driver as the ``columns`` = (id,
+      value) vector, with no Spark job and no ``save``; ``load`` then
+      receives that vector instead of a DataFrame;
     - at the budget, ``must_converge`` raises; otherwise the partial state
       is returned and its last metrics record a nonzero residual. A run
       that must converge and resumes at or past its budget runs one
@@ -50,12 +54,14 @@ def iterate(name: str, state, step, save, *, max_iters: int,
     - ``release``: relations unpersisted on every exit path.
     """
     ckpt = CheckpointManager(checkpoint_dir, checkpoint_interval)
+    vector = isinstance(state, np.ndarray)
     metrics: list[IterationMetrics] = []
     try:
         it = 0
         if checkpoint_dir and load is not None:
-            resumed = ckpt.resume(SparkSession.active(),
-                                  required_columns=columns)
+            resumed = (ckpt.resume_vector(state, columns) if vector else
+                       ckpt.resume(SparkSession.active(),
+                                   required_columns=columns))
             if resumed is not None:
                 state, it = load(resumed[0]), resumed[1]
         budget = it + 1 if must_converge and it >= max_iters else max_iters
@@ -70,7 +76,10 @@ def iterate(name: str, state, step, save, *, max_iters: int,
             )
             metrics.append(m)
             snap = ckpt.should_snapshot(it)
-            ckpt.write(save(new) if snap else None, m, snapshot=snap)
+            if vector:
+                ckpt.write_vector(new, m, columns, snapshot=snap)
+            else:
+                ckpt.write(save(new) if snap else None, m, snapshot=snap)
             prev, state = state, new
             if tol is not None and (linf if norm == "linf" else l1) <= tol:
                 return IterativeResult(

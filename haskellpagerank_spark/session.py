@@ -42,6 +42,25 @@ workers at once; over a persisted one, the task fills the cached partition
 and releases that worker first, so the CSR SpMV build persists its frame
 and decodes it in the same job.
 
+JIT tier. ``get_spark`` starts its local JVM with C1 as the only JIT
+compiler (``DRIVER_JAVA_OPTIONS``). In local mode every task runs in that
+JVM. In a short session the engine's jobs (planning, generated code, small
+per-partition kernels) run mostly while C2 is still compiling them, and on
+a few-core host its compile threads take CPU from the tasks. On a 4-vCPU x86 host,
+the first 5k-page ``build_graph`` of a session took 4.7 s and 14.6 CPU-s
+of JVM time with C2, 10.5 s of it in the compilers; with C1 only, 3.8 s
+and 6.3 CPU-s, 1.5 s compiling. Later calls in the same session were no
+slower with C1 (ingest 1.6-1.9 s -> 1.5 s, SpMV PageRank 1.8-1.9 ->
+1.6 s), so a session's first calls and its later ones differ less. A long
+session is another matter: once C2 has compiled Catalyst, the plan-heavy
+iterative tiers (join, pp, incremental CC) run faster with it, and
+``tests/test_pagerank_csr.py`` with ``tests/test_components.py`` took
+228-249 s with C2 against 277 s with C1. The test session therefore
+passes ``spark.driver.extraJavaOptions`` in ``extra_conf``, which replaces
+the default, to get tiered C1+C2 back. C1 gets C2's default code cache
+(240 MB instead of 48 MB): with 48 MB the same two test files took
+299-326 s.
+
 Small driver-side tables. ``spark.createDataFrame(list)`` turns the rows
 into an RDD of pickled batches that every scan re-reads through Python
 workers, one Python task per partition in every job that touches it: a
@@ -61,6 +80,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType, _parse_datatype_string
 
 MAX_DRIVER_MEM_MB = 48 * 1024
+# C1-only JIT in the local JVM (module docstring)
+DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 SIMPLIFIED_TRACEBACK = (
     "spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled")
 
@@ -133,7 +154,9 @@ def get_spark(
     """Build (or fetch) a SparkSession.
 
     ``cores=None`` honours $SPARK_GRAFT_CPUS (driver contract), falling back
-    to all machine cores. An existing active session is reused as-is.
+    to all machine cores. An ``extra_conf`` value for
+    ``spark.driver.extraJavaOptions`` replaces ``DRIVER_JAVA_OPTIONS``
+    (module docstring). An existing active session is reused as-is.
     """
     active = SparkSession.getActiveSession()
     if active is not None:
@@ -154,6 +177,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
     )
     extra_conf = extra_conf or {}
     if extra_conf.get(SIMPLIFIED_TRACEBACK, "true").lower() == "true":

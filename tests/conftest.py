@@ -7,8 +7,12 @@ from haskellpagerank_spark.session import get_spark
 
 @pytest.fixture(scope="session")
 def spark():
-    # small local session: tests verify semantics, not throughput
-    return get_spark(app_name="hpr-tests", cores=4, shuffle_partitions=4)
+    # small local session: tests verify semantics, not throughput. The
+    # suite is one long session, where tiered C1+C2 beats the C1-only
+    # default (session.py, "JIT tier").
+    return get_spark(app_name="hpr-tests", cores=4, shuffle_partitions=4,
+                     extra_conf={"spark.driver.extraJavaOptions":
+                                 "-XX:TieredStopAtLevel=4"})
 
 
 @pytest.fixture
@@ -40,14 +44,29 @@ def released(spark, monkeypatch):
 @pytest.fixture
 def fail_second_write(monkeypatch):
     """Calling it makes the second sweep of every later run raise: the
-    fixpoint driver calls ``CheckpointManager.write`` once per sweep, with
-    or without a ``checkpoint_dir``."""
-    write = CheckpointManager.write
+    fixpoint driver calls one ``CheckpointManager`` write entry point once
+    per sweep, with or without a ``checkpoint_dir`` (``write_vector`` for a
+    driver-resident vector, ``write`` otherwise). Every ``write*`` method
+    is patched, and the test fails unless the injected failure fired."""
+    fired = []
 
-    def failing_write(self, state, metrics, snapshot=None):
-        if metrics.iteration == 2:
-            raise OSError("injected snapshot failure")
-        return write(self, state, metrics, snapshot)
+    def failing(write):
+        def wrapper(self, state, metrics, *args, **kwargs):
+            if metrics.iteration == 2:
+                fired.append(metrics)
+                raise OSError("injected snapshot failure")
+            return write(self, state, metrics, *args, **kwargs)
+        return wrapper
 
-    return lambda: monkeypatch.setattr(CheckpointManager, "write",
-                                       failing_write)
+    armed = []
+
+    def arm():
+        armed.append(True)
+        for name in [n for n in vars(CheckpointManager)
+                     if n.startswith("write")]:
+            monkeypatch.setattr(CheckpointManager, name,
+                                failing(getattr(CheckpointManager, name)))
+
+    yield arm
+    if armed:
+        assert fired, "the injected snapshot failure never fired"

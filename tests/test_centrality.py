@@ -130,6 +130,24 @@ def test_trust_rank_matches_oracle(spark, name):
             np.array([got[v] for v in range(n)]), want, atol=1e-12)
 
 
+def test_trust_rank_teleport_total(spark, released):
+    """The weight total covers the seeds that are vertices: a non-positive
+    one raises (releasing what was cached), and a seed outside the graph
+    changes nothing."""
+    g = from_pairs(spark, FIXTURE_EDGES["doubleSquare"])
+    for rows in ([], [(0, 0.0)], [(0, 1.0), (1, -2.0)], [(99, 1.0)]):
+        wdf = spark.createDataFrame(rows, "id long, weight double")
+        with pytest.raises(ValueError, match="positive total"):
+            trust_rank(g, wdf, num_iters=2)
+        released(False)
+
+    def ranks(rows):
+        wdf = spark.createDataFrame(rows, "id long, weight double")
+        return sorted(trust_rank(g, wdf, num_iters=3).df.collect())
+
+    assert ranks([(0, 2.0), (99, 5.0)]) == ranks([(0, 2.0)])
+
+
 def test_trust_rank_uniform_seeds_equals_ppr(spark):
     name = FIXTURES[0]
     g = from_pairs(spark, FIXTURE_EDGES[name])

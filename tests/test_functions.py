@@ -572,7 +572,8 @@ def test_pack_token_shards_rejects_bad_args(corpus):
 
 def _snm_oracle(rows, n=3, threshold=0.5, window=4, key_chars=32):
     """Brute-force sorted-neighborhood: global (key, id) sort, all pairs
-    within rank distance <= window, same shingle-Jaccard scorer."""
+    within rank distance <= window, same shingle-Jaccard scorer. Docs
+    with a NULL id or text take no part."""
     import re
 
     def shingles(t):
@@ -583,7 +584,7 @@ def _snm_oracle(rows, n=3, threshold=0.5, window=4, key_chars=32):
 
     keyed = sorted(
         ((re.sub(r"\s+", " ", t.strip()).lower()[:key_chars], i, shingles(t))
-         for i, t in rows),
+         for i, t in rows if i is not None and t is not None),
         key=lambda r: (r[0], r[1]))
     out = {}
     for x in range(len(keyed)):
@@ -599,13 +600,20 @@ def _snm_oracle(rows, n=3, threshold=0.5, window=4, key_chars=32):
 
 @pytest.mark.parametrize("bucket_chars", [1, 3])
 def test_sorted_neighborhood_matches_oracle(corpus, bucket_chars):
-    rows = [(r["doc_id"], r["text"]) for r in
-            corpus.select("doc_id", "text").collect()]
-    got = {(r["id_a"], r["id_b"]): r["jaccard"]
-           for r in D.sorted_neighborhood_pairs(
-               corpus, threshold=0.3, window=3,
-               bucket_chars=bucket_chars).collect()}
-    assert got == _snm_oracle(rows, threshold=0.3, window=3)
+    """Also over the corpus plus NULL-text and NULL-id docs, which would
+    otherwise make a NULL bucket key (or pair with their text twins)."""
+    text = corpus.where("doc_id = 0").first()["text"]
+    nulls = corpus.sparkSession.createDataFrame(
+        [(8, None, "en"), (None, text, "en"), (None, None, "en")],
+        corpus.schema)
+    for docs in (corpus, corpus.unionByName(nulls)):
+        rows = [(r["doc_id"], r["text"]) for r in
+                docs.select("doc_id", "text").collect()]
+        got = {(r["id_a"], r["id_b"]): r["jaccard"]
+               for r in D.sorted_neighborhood_pairs(
+                   docs, threshold=0.3, window=3,
+                   bucket_chars=bucket_chars).collect()}
+        assert got == _snm_oracle(rows, threshold=0.3, window=3)
 
 
 def test_sorted_neighborhood_finds_mid_doc_edit(spark):

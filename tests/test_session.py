@@ -10,6 +10,7 @@ import textwrap
 import pandas as pd
 
 from haskellpagerank_spark.session import (
+    DRIVER_JAVA_OPTIONS,
     driver_memory,
     local_df,
     skip_unchanged_zip_rereads,
@@ -33,6 +34,30 @@ def test_driver_memory_env_wins(monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
     assert driver_memory(16 * GB) == "3g"
     assert driver_memory() == "3g"
+
+
+def test_get_spark_passes_its_jit_options_to_the_jvm(spark):
+    """The test session replaced the JIT options (conftest); a default
+    session gets C1 only (run in a fresh interpreter, since a session is
+    a singleton)."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = list(mx.getRuntimeMXBean().getInputArguments())
+    assert "-XX:TieredStopAtLevel=4" in args, args
+    script = textwrap.dedent("""
+        from haskellpagerank_spark.session import get_spark
+        spark = get_spark(app_name="jit", cores=1)
+        mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+        print("\\n".join(mx.getRuntimeMXBean().getInputArguments()))
+        spark.stop()
+    """)
+    env = {**os.environ, "PYTHONPATH": os.pathsep.join(
+        filter(None, [REPO, os.environ.get("PYTHONPATH")]))}
+    proc = subprocess.run([sys.executable, "-c", script], env=env,
+                          capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    args = proc.stdout.splitlines()
+    assert set(DRIVER_JAVA_OPTIONS.split()) <= set(args), args
+    assert "-XX:TieredStopAtLevel=1" in args
 
 
 def test_worker_tasks_do_not_reread_zip_archives(spark):
